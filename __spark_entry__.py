@@ -68,6 +68,7 @@ from marketing_attribution_etl_framework__maef_spark.operators import segmentati
 from marketing_attribution_etl_framework__maef_spark.operators import survival as surv
 from marketing_attribution_etl_framework__maef_spark.plans.pipeline import AttributionPipeline, PipelineConfig
 from marketing_attribution_etl_framework__maef_spark.sources import bucketed as bkt
+from marketing_attribution_etl_framework__maef_spark.stores import staged
 
 LOOKBACK_DAYS = 30
 
@@ -114,22 +115,7 @@ journeys AS (
 )"""
 
 
-def _evict_stale(cache: dict, app_id: str) -> None:
-    """Drop cache entries left by dead Spark applications, best-effort
-    unpersisting any checkpointed DataFrame they hold (ADVICE r11: the
-    old pop-only eviction leaked checkpoint blocks if one process ever
-    hosts multiple Spark applications in sequence)."""
-    for stale in [k for k in cache if k[0] != app_id]:
-        v = cache.pop(stale, None)
-        try:
-            v.unpersist()
-        except Exception:
-            pass  # stopped context or non-DataFrame value: nothing to free
-
-
-_JOURNEYS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _journeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared J1 journeys build, localCheckpoint'd once per
     (application, sf_dir) — ~25 registry queries re-derive this exact
@@ -137,21 +123,14 @@ def _journeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     ...), which re-ran the user_id shuffle join per query (~1 s each
     at sf0.1, 52 s across the family).  The tfidf-weights precedent
     (CLAUDE.md perf rules): an expensive multi-consumer lineage beats
-    AQE recompute when checkpointed once.  Keyed by applicationId (not
-    id(spark)); dead-application entries evicted on miss (the
-    _KMEANS_CACHE contract).  At production scale this is the staged
-    journeys table every downstream model reads."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _JOURNEYS_CACHE:
-        _evict_stale(_JOURNEYS_CACHE, app_id)
-        _JOURNEYS_CACHE[key] = jny.build_journeys(
-            domain.conversions(spark, sf_dir),
-            domain.session_sources(spark, sf_dir),
-            strict_before=False,
-            lookback_days=LOOKBACK_DAYS,
-        ).localCheckpoint()
-    return _JOURNEYS_CACHE[key]
+    AQE recompute when checkpointed once.  At production scale this
+    is the staged journeys table every downstream model reads."""
+    return jny.build_journeys(
+        domain.conversions(spark, sf_dir),
+        domain.session_sources(spark, sf_dir),
+        strict_before=False,
+        lookback_days=LOOKBACK_DAYS,
+    ).localCheckpoint()
 
 
 # ---------------------------------------------------------------------------
@@ -159,24 +138,17 @@ def _journeys(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_BASKET_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared L135 basket spine (co-ordered part pairs, support
     >= 2), localCheckpoint'd once per (application, sf_dir): five
     registry queries (basket pairs, item recs, triangle count, k-core,
     label propagation) re-derived the same capped-basket self-join
-    (~3 s each at sf0.1).  Same contract as _JOURNEYS_CACHE; at
-    production scale this is the staged co-occurrence table."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _BASKET_CACHE:
-        _evict_stale(_BASKET_CACHE, app_id)
-        _BASKET_CACHE[key] = bsk.basket_pairs(
-            domain.load_table(spark, sf_dir, "lineitem"), min_support=2
-        ).localCheckpoint()
-    return _BASKET_CACHE[key]
+    (~3 s each at sf0.1).  At production scale this is the staged
+    co-occurrence table."""
+    return bsk.basket_pairs(
+        domain.load_table(spark, sf_dir, "lineitem"), min_support=2
+    ).localCheckpoint()
 
 
 def q_journey_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -946,9 +918,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.exact_dedup_groups(_aug_docs(spark, sf_dir))
 
 
-_MINHASH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verified corpus near-dup pair table (minhash_dedup_pairs at
     the default operating point), localCheckpoint'd once per
@@ -959,21 +929,13 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~3 s build to every one of them (r06 bench: 25.7 s family total).
     MinHash signatures and the pair verify are per-doc / per-pair
     functions, so sharing the table is result-identical for every
-    consumer (see curate_corpus's corpus_pairs note).  Same cache
-    contract as _JOURNEYS_CACHE / _NEARDUP_BANDS_CACHE."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _MINHASH_PAIRS_CACHE:
-        _evict_stale(_MINHASH_PAIRS_CACHE, app_id)
-        _MINHASH_PAIRS_CACHE[key] = dd.minhash_dedup_pairs(
-            _aug_docs(spark, sf_dir)
-        ).localCheckpoint()
-    return _MINHASH_PAIRS_CACHE[key]
+    consumer (see curate_corpus's corpus_pairs note)."""
+    return dd.minhash_dedup_pairs(
+        _aug_docs(spark, sf_dir)
+    ).localCheckpoint()
 
 
-_DUP_CLUSTERS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cluster_duplicates fixpoint over the staged corpus pair store,
     checkpointed once per (application, sf_dir): three registry
@@ -982,14 +944,9 @@ def _dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     job latency on the tiny pair graph, so re-running it per consumer
     was 3x wasted wall.  In production this is the dedup-clusters
     table written beside the pair store."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _DUP_CLUSTERS_CACHE:
-        _evict_stale(_DUP_CLUSTERS_CACHE, app_id)
-        _DUP_CLUSTERS_CACHE[key] = dd.cluster_duplicates(
-            _minhash_pairs(spark, sf_dir)
-        ).localCheckpoint()
-    return _DUP_CLUSTERS_CACHE[key]
+    return dd.cluster_duplicates(
+        _minhash_pairs(spark, sf_dir)
+    ).localCheckpoint()
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1009,9 +966,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dup_clusters(spark, sf_dir)
 
 
-_SIMHASH_CANDS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _simhash_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The banded-SimHash candidate pair table (doc_a, doc_b, hamming)
     over the augmented corpus, localCheckpoint'd once per
@@ -1020,14 +975,9 @@ def _simhash_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
     _minhash_pairs staging pattern), so the signature build + band
     self-join runs once instead of per consumer.  In production this
     is the candidate store written beside the simhash index."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _SIMHASH_CANDS_CACHE:
-        _evict_stale(_SIMHASH_CANDS_CACHE, app_id)
-        _SIMHASH_CANDS_CACHE[key] = dd.simhash_candidates(
-            dd.simhash(_aug_docs(spark, sf_dir))
-        ).localCheckpoint()
-    return _SIMHASH_CANDS_CACHE[key]
+    return dd.simhash_candidates(
+        dd.simhash(_aug_docs(spark, sf_dir))
+    ).localCheckpoint()
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1176,48 +1126,27 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the k=8 / 2-iteration centroid table is identical for every query
-# that wants it; kmeans_centroids already localCheckpoints its result,
-# so caching the handle per (session, sf) skips the whole Lloyd loop
-# on the second consumer — same pattern as domain.events.
-_KMEANS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _kmeans8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # keyed by applicationId, not id(spark): CPython can reuse a dead
-    # session's id() for a new one, resurrecting handles bound to a
-    # stopped SparkContext (ADVICE r02).
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _KMEANS_CACHE:
-        # evict dead-application entries on miss (ADVICE r03: unbounded
-        # growth in long-lived multi-session processes)
-        _evict_stale(_KMEANS_CACHE, app_id)
-        _KMEANS_CACHE[key] = sim.kmeans_centroids(_embs(spark, sf_dir), k=8, n_iter=2)
-    return _KMEANS_CACHE[key]
+    """The k=8 / 2-iteration centroid table, identical for every query
+    that wants it; kmeans_centroids already localCheckpoints its
+    result, so staging the handle skips the whole Lloyd loop on the
+    second consumer."""
+    return sim.kmeans_centroids(_embs(spark, sf_dir), k=8, n_iter=2)
 
 
-_AUG_KMEANS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _aug_kmeans8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kmeans_centroids over the AUGMENTED embeddings (semdedup's
-    input), cached per (application, sf_dir) — the centroid store
+    input), staged per (application, sf_dir) — the centroid store
     staged beside _kmeans8; the Lloyd loop is a pure function of the
     corpus, so serving semantic_dedup from it is result-identical."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _AUG_KMEANS_CACHE:
-        _evict_stale(_AUG_KMEANS_CACHE, app_id)
-        _AUG_KMEANS_CACHE[key] = sim.kmeans_centroids(
-            _aug_embeddings(spark, sf_dir), k=8, n_iter=2
-        )
-    return _AUG_KMEANS_CACHE[key]
+    return sim.kmeans_centroids(
+        _aug_embeddings(spark, sf_dir), k=8, n_iter=2
+    )
 
 
-_ANN_TRUTH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _ann_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared brute-force ANN ground-truth table for the recall
     audit family (VERDICT r11 #2), localCheckpoint'd once per
@@ -1255,60 +1184,55 @@ def _ann_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     paid ONCE per release, not once per audit readout."""
     from pyspark.sql import Window
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _ANN_TRUTH_CACHE:
-        _evict_stale(_ANN_TRUTH_CACHE, app_id)
-        e = _embs(spark, sf_dir)
-        c = sim._norm_vec(e, "vec_id", "embedding", "vec_id", "_v").withColumn(
-            "half", (F.col("vec_id") % 2).cast("long")
+    e = _embs(spark, sf_dir)
+    c = sim._norm_vec(e, "vec_id", "embedding", "vec_id", "_v").withColumn(
+        "half", (F.col("vec_id") % 2).cast("long")
+    )
+    q = sim._norm_vec(
+        e.filter(F.col("vec_id") % 50 == 7), "vec_id", "embedding", "query_id", "_q"
+    )
+    scored = c.crossJoin(F.broadcast(q)).select(
+        "half", "query_id", "vec_id", sim._pair_cos("_q", "_v").alias("_cos")
+    )
+    w_all = Window.partitionBy("query_id").orderBy(
+        F.desc("_cos"), F.asc("vec_id")
+    )
+    w_half = Window.partitionBy("half", "query_id").orderBy(
+        F.desc("_cos"), F.asc("vec_id")
+    )
+    w_q = Window.partitionBy("query_id")
+    ranked = scored.select(
+        "query_id",
+        "vec_id",
+        "half",
+        F.row_number().over(w_all).alias("rank_all"),
+        F.row_number().over(w_half).alias("rank_half"),
+    ).withColumn(
+        "_self_rank",
+        F.max(
+            F.when(F.col("vec_id") == F.col("query_id"), F.col("rank_all"))
+        ).over(w_q),
+    )
+    k = 5
+    return (
+        ranked.withColumn(
+            "rank_excl",
+            F.when(F.col("vec_id") == F.col("query_id"), F.lit(None)).otherwise(
+                F.col("rank_all")
+                - F.when(
+                    F.col("rank_all") > F.coalesce("_self_rank", F.lit(1 << 31)),
+                    1,
+                ).otherwise(0)
+            ),
         )
-        q = sim._norm_vec(
-            e.filter(F.col("vec_id") % 50 == 7), "vec_id", "embedding", "query_id", "_q"
+        .filter(
+            (F.col("rank_all") <= k)
+            | (F.col("rank_half") <= k)
+            | (F.col("rank_excl") <= k)
         )
-        scored = c.crossJoin(F.broadcast(q)).select(
-            "half", "query_id", "vec_id", sim._pair_cos("_q", "_v").alias("_cos")
-        )
-        w_all = Window.partitionBy("query_id").orderBy(
-            F.desc("_cos"), F.asc("vec_id")
-        )
-        w_half = Window.partitionBy("half", "query_id").orderBy(
-            F.desc("_cos"), F.asc("vec_id")
-        )
-        w_q = Window.partitionBy("query_id")
-        ranked = scored.select(
-            "query_id",
-            "vec_id",
-            "half",
-            F.row_number().over(w_all).alias("rank_all"),
-            F.row_number().over(w_half).alias("rank_half"),
-        ).withColumn(
-            "_self_rank",
-            F.max(
-                F.when(F.col("vec_id") == F.col("query_id"), F.col("rank_all"))
-            ).over(w_q),
-        )
-        k = 5
-        _ANN_TRUTH_CACHE[key] = (
-            ranked.withColumn(
-                "rank_excl",
-                F.when(F.col("vec_id") == F.col("query_id"), F.lit(None)).otherwise(
-                    F.col("rank_all")
-                    - F.when(
-                        F.col("rank_all") > F.coalesce("_self_rank", F.lit(1 << 31)),
-                        1,
-                    ).otherwise(0)
-                ),
-            )
-            .filter(
-                (F.col("rank_all") <= k)
-                | (F.col("rank_half") <= k)
-                | (F.col("rank_excl") <= k)
-            )
-            .select("query_id", "vec_id", "half", "rank_all", "rank_half", "rank_excl")
-            .localCheckpoint()
-        )
-    return _ANN_TRUTH_CACHE[key]
+        .select("query_id", "vec_id", "half", "rank_all", "rank_half", "rank_excl")
+        .localCheckpoint()
+    )
 
 
 def q_ann_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1612,25 +1536,17 @@ def q_source_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("source", "rnk", "doc_id", "score_q20")
 
 
-_NEARDUP_BANDS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _neardup_corpus_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ingest-side corpus LSH band table for llm_neardup_incremental,
     localCheckpoint'd once per (application, sf_dir) — in production
     this is a persistent table bucketed on (band, key) written once at
     ingest; re-deriving it inline made the query the slowest in the
-    bench for two rounds (17.2 s at sf0.1, VERDICT r05 perf #1).  Same
-    cache contract as _JOURNEYS_CACHE."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _NEARDUP_BANDS_CACHE:
-        _evict_stale(_NEARDUP_BANDS_CACHE, app_id)
-        corpus = _aug_docs(spark, sf_dir).filter(F.col("doc_id") < 100000).select(
-            "doc_id", "text"
-        )
-        _NEARDUP_BANDS_CACHE[key] = dd.document_bands(corpus).localCheckpoint()
-    return _NEARDUP_BANDS_CACHE[key]
+    bench for two rounds (17.2 s at sf0.1, VERDICT r05 perf #1)."""
+    corpus = _aug_docs(spark, sf_dir).filter(F.col("doc_id") < 100000).select(
+        "doc_id", "text"
+    )
+    return dd.document_bands(corpus).localCheckpoint()
 
 
 def q_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1649,25 +1565,18 @@ def q_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the 8-merge table is identical for both BPE consumers; the learned
-# rules are a handful of driver-side tuples, so cache THEM (not a
-# DataFrame handle) per (session, sf) — q_bpe_encode then skips the
-# whole merge-learning loop. Same keying rationale as _KMEANS_CACHE.
-_BPE_CACHE: dict[tuple[str, str], list[tuple]] = {}
-
-
+@staged
 def _bpe_rules(spark: SparkSession, sf_dir: str) -> list[tuple]:
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _BPE_CACHE:
-        _evict_stale(_BPE_CACHE, app_id)
-        _BPE_CACHE[key] = [
-            tuple(r)
-            for r in tok.bpe_merges(_docs(spark, sf_dir), n_merges=8)
-            .orderBy("merge_rank")
-            .collect()
-        ]
-    return _BPE_CACHE[key]
+    """The 8-merge table, identical for both BPE consumers; the
+    learned rules are a handful of Python tuples, so the store
+    holds THEM (not a DataFrame handle) — q_bpe_encode then skips the
+    whole merge-learning loop."""
+    return [
+        tuple(r)
+        for r in tok.bpe_merges(_docs(spark, sf_dir), n_merges=8)
+        .orderBy("merge_rank")
+        .collect()
+    ]
 
 
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1681,23 +1590,16 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BPE_ENCODE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared BPE encode table (doc_id, n_words, n_bpe_tokens),
     localCheckpoint'd once per (application, sf_dir): the vocabulary
     merge-fold feeds both L58 and the L172 fertility report (~2 s each
-    at sf0.1).  Same cache contract as _JOURNEYS_CACHE."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _BPE_ENCODE_CACHE:
-        _evict_stale(_BPE_ENCODE_CACHE, app_id)
-        rules = [(r[1], r[2]) for r in _bpe_rules(spark, sf_dir)]
-        _BPE_ENCODE_CACHE[key] = tok.bpe_encode_counts(
-            _docs(spark, sf_dir), rules
-        ).localCheckpoint()
-    return _BPE_ENCODE_CACHE[key]
+    at sf0.1)."""
+    rules = [(r[1], r[2]) for r in _bpe_rules(spark, sf_dir)]
+    return tok.bpe_encode_counts(
+        _docs(spark, sf_dir), rules
+    ).localCheckpoint()
 
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4501,7 +4403,7 @@ def q_channel_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L172: per-source BPE tokenizer fertility (tokens per word) —
     the mixing-report statistic tokenizer teams watch per domain.
-    Reuses the L57 learned merges (cached per application) and the
+    Reuses the L57 learned merges (the staged _bpe_rules store) and the
     vocabulary-folded encode (llm/tokenizer.py bpe_encode_counts);
     fertility is exact: sum(tokens) * 2^20 div sum(words) in
     DECIMAL(38,0)."""
@@ -4967,30 +4869,17 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_INDEX_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+@staged
 def _pq_index(spark: SparkSession, sf_dir: str) -> tuple:
     """The staged PQ index artifacts (sub, codebooks, codes) per
     (application, sf_dir) — llm/pq.py pq_index; the tables a
     production deployment trains and writes ONCE at ingest (codes ARE
     the index).  Both PQ registry consumers (L191 search, L322 recall
     audit) read it and each still pays its own ADC scan + exact rerank
-    — the serving work.  Same cache contract as _KMEANS_CACHE."""
+    — the serving work."""
     from marketing_attribution_etl_framework__maef_spark.llm import pq
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _PQ_INDEX_CACHE:
-        for stale in [k for k in _PQ_INDEX_CACHE if k[0] != app_id]:
-            vals = _PQ_INDEX_CACHE.pop(stale, None) or ()
-            for v in vals:
-                try:
-                    v.unpersist()
-                except Exception:
-                    pass
-        _PQ_INDEX_CACHE[key] = pq.pq_index(_embs(spark, sf_dir))
-    return _PQ_INDEX_CACHE[key]
+    return pq.pq_index(_embs(spark, sf_dir))
 
 
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5877,9 +5766,7 @@ def q_stream_mix_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_NGRAM_SETS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _ngram_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc distinct 3-shingle hash sets over the augmented corpus
     (llm/dedup.py blocked_shingle_sets), localCheckpoint'd once per
@@ -5894,40 +5781,27 @@ def _ngram_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     side was picked for BroadcastHashJoin (measured 6-16 s swings at
     sf0.1). Checkpointing pins real sizes: the pair join reverts to a
     shuffled join on (_blk, _h) and the shingling runs once."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _NGRAM_SETS_CACHE:
-        _evict_stale(_NGRAM_SETS_CACHE, app_id)
-        _NGRAM_SETS_CACHE[key] = dd.blocked_shingle_sets(
-            _aug_docs(spark, sf_dir)
-        ).localCheckpoint()
-    return _NGRAM_SETS_CACHE[key]
+    return dd.blocked_shingle_sets(
+        _aug_docs(spark, sf_dir)
+    ).localCheckpoint()
 
 
-_AUG_BANDS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _aug_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The minhash LSH band table over the augmented corpus,
     localCheckpoint'd once per (application, sf_dir): the hot-bucket
     cause analysis (L265) and the candidate-cost audit (L279) both
     read it, and the cost audit alone reads it three times — in
-    production this is the banded index written once at ingest.  Same
-    cache contract as _MINHASH_PAIRS_CACHE."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _AUG_BANDS_CACHE:
-        _evict_stale(_AUG_BANDS_CACHE, app_id)
-        docs = _aug_docs(spark, sf_dir)
-        norm = txt.normalize_text(F.col("text"))
-        exploded = docs.select(
-            F.col("doc_id"),
-            F.explode(txt.word_shingles(txt.words(norm), 3)).alias("shingle"),
-        )
-        _AUG_BANDS_CACHE[key] = dd.lsh_bands(
-            dd.minhash_signatures(exploded, "doc_id", "shingle")
-        ).localCheckpoint()
-    return _AUG_BANDS_CACHE[key]
+    production this is the banded index written once at ingest."""
+    docs = _aug_docs(spark, sf_dir)
+    norm = txt.normalize_text(F.col("text"))
+    exploded = docs.select(
+        F.col("doc_id"),
+        F.explode(txt.word_shingles(txt.words(norm), 3)).alias("shingle"),
+    )
+    return dd.lsh_bands(
+        dd.minhash_signatures(exploded, "doc_id", "shingle")
+    ).localCheckpoint()
 
 
 def q_lsh_hot_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6015,9 +5889,7 @@ def q_ab_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return xpr.ab_quantile_effects(domain.events(spark, sf_dir))
 
 
-_STREAM_SESSIONS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING session table (entry_channel, n_events) from one
     ``session_window`` run (closed-interval gap, the pinned batch
@@ -6030,11 +5902,6 @@ def _stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads the table, not the stream."""
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as inc
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key in _STREAM_SESSIONS_CACHE:
-        return _STREAM_SESSIONS_CACHE[key]
-    _evict_stale(_STREAM_SESSIONS_CACHE, app_id)
     ev = inc.stream_events_nanos(spark, f"{sf_dir}/events.parquet")
     g = (
         ev.filter(F.col("event_type") != "purchase")
@@ -6044,17 +5911,13 @@ def _stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.struct("ts", "event_id", "event_type")).alias("_first"),
         )
     )
-    out = inc.run_to_memory(g, "stream_sessions_store").select(
+    return inc.run_to_memory(g, "stream_sessions_store").select(
         F.col("_first.event_type").alias("entry_channel"),
         "n_events",
     )
-    _STREAM_SESSIONS_CACHE[key] = out
-    return out
 
 
-_STREAM_USER_FLAGS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _stream_user_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING per-user flag table (n non-purchase touches,
     ever-bought, ever-errored) from ONE streaming user-grain aggregate,
@@ -6068,11 +5931,6 @@ def _stream_user_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintains, read by every serving query."""
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as inc
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key in _STREAM_USER_FLAGS_CACHE:
-        return _STREAM_USER_FLAGS_CACHE[key]
-    _evict_stale(_STREAM_USER_FLAGS_CACHE, app_id)
     ev = inc.stream_events_nanos(spark, f"{sf_dir}/events.parquet")
     g = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("_n_all"),
@@ -6084,9 +5942,7 @@ def _stream_user_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("_buyer"),
         F.max((F.col("event_type") == "error").cast("long")).alias("_err"),
     )
-    out = inc.run_to_memory(g, "stream_user_flags_store")
-    _STREAM_USER_FLAGS_CACHE[key] = out
-    return out
+    return inc.run_to_memory(g, "stream_user_flags_store")
 
 
 def q_stream_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7882,25 +7738,17 @@ def _span_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DUP_SPANS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def _dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The maximal duplicated-span table (llm/dedup.py
     duplicated_spans, k=8) over the planted corpus, localCheckpoint'd
     once per (application, sf_dir): the coverage roll-up (L323) and
     the recall gate's semi+anti pair (L324) all read it — in
     production this is the span store ExactSubstr-style pipelines
-    write once at ingest and every removal policy reads.  Same cache
-    contract as _MINHASH_PAIRS_CACHE."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _DUP_SPANS_CACHE:
-        _evict_stale(_DUP_SPANS_CACHE, app_id)
-        _DUP_SPANS_CACHE[key] = dd.duplicated_spans(
-            _span_docs(spark, sf_dir), k=8, min_docs=2
-        ).localCheckpoint()
-    return _DUP_SPANS_CACHE[key]
+    write once at ingest and every removal policy reads."""
+    return dd.duplicated_spans(
+        _span_docs(spark, sf_dir), k=8, min_docs=2
+    ).localCheckpoint()
 
 
 def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketing_attribution_etl_framework__maef_spark import stores
+
 TABLES = [
     "region",
     "nation",
@@ -39,19 +41,6 @@ TABLES = [
     "documents",
     "embeddings",
 ]
-
-# per-(session, sf_dir) cache of the events DataFrame so one pipeline
-# run scans events.parquet once instead of once per derived table
-# (conversions + session_sources + session_costs used to mean ~6 scans
-# per report query). local/bench scale: .cache() is trivial memory; at
-# 100 TB the equivalent move is materializing the three derived MAEF
-# tables once per run via sources.io.Warehouse — same call sites, just
-# swap events() for Warehouse.read.
-# Keyed by applicationId, not id(spark): CPython can reuse a dead
-# session's id for a new one, handing out cached handles bound to a
-# stopped JVM (ADVICE r02; same rationale as the k-means/BPE caches).
-_EVENTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one harness table.
@@ -76,27 +65,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+@stores.staged
 def events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared, cached events scan all MAEF tables derive from."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _EVENTS_CACHE:
-        # Evict entries from other (stopped) applications on miss so a
-        # long-lived multi-session process (test runners) doesn't
-        # accumulate dead-JVM DataFrame handles forever (ADVICE r03).
-        for stale in [k for k in _EVENTS_CACHE if k[0] != app_id]:
-            _EVENTS_CACHE.pop(stale, None)
-        _EVENTS_CACHE[key] = load_table(spark, sf_dir, "events").cache()
-    return _EVENTS_CACHE[key]
+    """The shared, cached events scan all MAEF tables derive from, a
+    staged store: one pipeline run scans events.parquet once instead of
+    once per derived table (conversions + session_sources +
+    session_costs used to mean ~6 scans per report query).  Local/bench
+    scale: ``.cache()`` is trivial memory; at 100 TB the equivalent move
+    is materializing the three derived MAEF tables once per run via
+    sources.io.Warehouse — same call sites, just swap events() for
+    Warehouse.read."""
+    return load_table(spark, sf_dir, "events").cache()
 
 
 def clear_events_cache() -> None:
-    for df in _EVENTS_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _EVENTS_CACHE.clear()
+    """Drop and unpersist every staged events scan."""
+    stores.clear("events")
 
 
 def conversions_from_events(ev: DataFrame) -> DataFrame:

@@ -164,62 +164,6 @@ def rolling_distinct_users(ev: DataFrame, window_days: int = 7) -> DataFrame:
     )
 
 
-def lag_autocorrelation(ev: DataFrame, lag: int = 1) -> DataFrame:
-    """Per-channel lag-``lag`` autocorrelation of the daily event
-    count — the standard seasonality screen before fitting any pacing
-    or forecast model on channel volume.
-
-    Exactness: daily counts are exact longs; every sum/product in the
-    Pearson formula is carried in DECIMAL(38,0) (daily counts reach
-    ~1e10 at 100 TB, so n*sum(x*y) overflows int64); the only float
-    op is the final r = num / sqrt(dx * dy), whose value is
-    irrational — q20-safe under the repo float policy. The lag pairs
-    come from a ROWS-frame lag over the observed day sequence (day is
-    unique per channel post-aggregation, so the order is total and
-    both engines see identical pairs).
-
-    Shape: one map-side-combinable day-grain aggregate, one window
-    over |channels| x |days| rows (calendar-bounded, not
-    data-bounded), one final per-channel aggregate. No shuffle
-    touches raw-event volume.
-
-    Output: channel, n_pairs (long), acf_q20 (long).
-    """
-    daily = (
-        ev.select(
-            F.col("event_type").alias("channel"),
-            F.col("ts").cast("date").alias("_d"),
-        )
-        .groupBy("channel", "_d")
-        .agg(F.count(F.lit(1)).cast("long").alias("x"))
-    )
-    w = Window.partitionBy("channel").orderBy("_d")
-    paired = daily.select(
-        "channel",
-        F.col("x").cast("decimal(38,0)").alias("xt"),
-        F.lag("x", lag).over(w).cast("decimal(38,0)").alias("xp"),
-    ).filter(F.col("xp").isNotNull())
-    agg = paired.groupBy("channel").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-        F.sum(F.col("xt") * F.col("xp")).alias("sxy"),
-        F.sum("xt").alias("sx"),
-        F.sum("xp").alias("sy"),
-        F.sum(F.col("xt") * F.col("xt")).alias("sxx"),
-        F.sum(F.col("xp") * F.col("xp")).alias("syy"),
-    )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    dx = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    dy = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    r = num / F.sqrt(dx * dy)
-    # a constant series has zero variance on one side -> r undefined;
-    # emitting NaN would poison the value hash, so such channels drop.
-    return agg.filter((dx > F.lit(0.0)) & (dy > F.lit(0.0))).select(
-        "channel",
-        F.col("n").cast("long").alias("n_pairs"),
-        F.floor(r * F.lit(1048576.0) + F.lit(0.5)).cast("long").alias("acf_q20"),
-    )
-
-
 def ols_trend(ev: DataFrame) -> DataFrame:
     """Per-channel ordinary-least-squares trend of daily revenue-
     bearing volume: slope of daily value cents against the day index

@@ -24,7 +24,7 @@ scale layer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -48,10 +48,6 @@ def write_bucketed(
     if sort_col is not None:
         w = w.sortBy(sort_col)
     w.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 def has_join_exchange(df: DataFrame, key: str) -> bool:

@@ -11,6 +11,8 @@ and the cpo/roas derived-metric formulas against the shipped report."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,6 +28,14 @@ from marketing_attribution_etl_framework__maef_spark.operators.reporting import 
 from marketing_attribution_etl_framework__maef_spark.sources.io import read_journey_entries
 
 GOLD = "/root/reference/data/output"
+
+if not os.path.isdir(GOLD):
+    pytest.skip(
+        f"reference golden artifacts not present at {GOLD}; these tests pin "
+        "against the reference checkout's shipped outputs and cannot run "
+        "without it",
+        allow_module_level=True,
+    )
 
 
 def test_required_format_contract(spark):

@@ -27,6 +27,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
+from bench import prestage
 from marketing_attribution_etl_framework__maef_spark import domain
 from marketing_attribution_etl_framework__maef_spark.llm import classify as cls
 from marketing_attribution_etl_framework__maef_spark.llm import curation as cur
@@ -473,14 +474,14 @@ def main() -> None:
     spark = get_spark("ab-r12")
     queries = em.queries()
     spark.sparkContext.setJobDescription("prestage shared stores")
-    domain.events(spark, args.sf).write.format("noop").mode("overwrite").save()
-    for builder in (
-        em._journeys, em._minhash_pairs, em._dup_clusters, em._kmeans8,
-        em._aug_kmeans8, em._ngram_sets, em._aug_bands, em._ann_truth,
-    ):
-        _noop(builder(spark, args.sf))
-    for _t in em._pq_index(spark, args.sf):
-        _noop(_t)
+    prestage(
+        spark,
+        args.sf,
+        (
+            "events", "journeys", "minhash_pairs", "dup_clusters", "kmeans8",
+            "aug_kmeans8", "ngram_sets", "aug_bands", "ann_truth", "pq_index",
+        ),
+    )
 
     for name in names:
         old_fn, new_fn = PAIRS[name]

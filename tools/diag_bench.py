@@ -47,7 +47,7 @@ _REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_DIR)
 
 import __spark_entry__ as entrymod
-from marketing_attribution_etl_framework__maef_spark import domain
+import bench
 from marketing_attribution_etl_framework__maef_spark.session import get_spark
 
 SUSPECTS = [
@@ -89,8 +89,6 @@ def probe(spark) -> dict:
 
 
 def time_suspects(spark, sf_dir: str) -> dict[str, float]:
-    import bench
-
     qs = entrymod.queries()
     out = {}
     for name in SUSPECTS:
@@ -116,10 +114,9 @@ def main() -> None:
     print("== cold probe ==")
     print(json.dumps(probe(spark)))
     print("== solo suspect timings (cold session, sf0.1) ==")
-    # stage shared caches first, as bench does, so the numbers are the
-    # queries' own plans
-    domain.events(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    entrymod._journeys(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    # stage the shared stores first, as bench does, so the numbers are
+    # the queries' own plans
+    bench.prestage(spark, sf_dir)
     print(json.dumps(time_suspects(spark, sf_dir)))
     print(json.dumps(probe(spark)))
 

@@ -68,6 +68,7 @@ from marketing_attribution_etl_framework__maef_spark.operators import segmentati
 from marketing_attribution_etl_framework__maef_spark.operators import survival as surv
 from marketing_attribution_etl_framework__maef_spark.plans.pipeline import AttributionPipeline, PipelineConfig
 from marketing_attribution_etl_framework__maef_spark.sources import bucketed as bkt
+from marketing_attribution_etl_framework__maef_spark.session import scratch_dir
 from marketing_attribution_etl_framework__maef_spark.stores import staged
 
 LOOKBACK_DAYS = 30
@@ -669,8 +670,6 @@ def q_warehouse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (read_journey_entries), and summarize every round-tripped surface.
     Each per-format row must match the straight-SQL summary — proving
     the sinks and sources neither drop, duplicate, nor corrupt rows."""
-    import shutil
-
     from marketing_attribution_etl_framework__maef_spark.sources.io import (
         Warehouse,
         read_journey_entries,
@@ -678,16 +677,7 @@ def q_warehouse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_json_single,
     )
 
-    # scratch lives OUTSIDE the repo tree (ADVICE r02: writing it under
-    # the repo root dirtied the working tree on every crosscheck/bench
-    # run and 680k lines of it got committed before the ignore rule).
-    root = os.path.join(
-        os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/maef_spark_scratch"),
-        ".wh_tmp",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
+    root = scratch_dir(".wh_tmp", os.path.basename(os.path.normpath(sf_dir)))
 
     costs = domain.session_costs(spark, sf_dir)
     wh_a = Warehouse(spark, os.path.join(root, "a"))
@@ -3168,17 +3158,9 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     milli-units next to the straight-from-parquet summary; the oracle
     emits the same summary twice, so any row drop, duplication, or
     value corruption in the ORC path hash-mismatches."""
-    import shutil
-
     from marketing_attribution_etl_framework__maef_spark.sources.io import write_orc_single
 
-    root = os.path.join(
-        os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/maef_spark_scratch"),
-        ".orc_tmp",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
+    root = scratch_dir(".orc_tmp", os.path.basename(os.path.normpath(sf_dir)))
     costs = domain.session_costs(spark, sf_dir)
     orc_path = os.path.join(root, "costs.orc")
     write_orc_single(costs, orc_path)
@@ -3980,18 +3962,10 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary is a parquet table exactly as here (the merge_upsert path
     is partition-pruned dynamic overwrite); the in-line checks are one
     cheap agg per boundary."""
-    import shutil
-
     from marketing_attribution_etl_framework__maef_spark.plans.pipeline import AttributionPipeline, PipelineConfig
     from marketing_attribution_etl_framework__maef_spark.sources.io import Warehouse, merge_upsert
 
-    root = os.path.join(
-        os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/maef_spark_scratch"),
-        ".wh_e2e",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
+    root = scratch_dir(".wh_e2e", os.path.basename(os.path.normpath(sf_dir)))
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -4916,14 +4890,7 @@ def q_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted per day, so a pruning bug that drops or duplicates rows —
     or a writer bug that misroutes rows across partitions —
     hash-mismatches against the straight-from-source oracle."""
-    import shutil
-
-    root = os.path.join(
-        os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/maef_spark_scratch"),
-        ".part_tmp",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(".part_tmp", os.path.basename(os.path.normpath(sf_dir)))
     ev = domain.events(spark, sf_dir).filter(F.col("event_type") != "purchase")
     ev.select("event_id", "ts", "user_id", "value", "event_type").write.partitionBy(
         "event_type"
@@ -6269,20 +6236,12 @@ def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     any row drop, duplication, or value corruption in either the
     fragmented write or the compaction rewrite hash-mismatches.  The
     file-count mechanics stay pytest-pinned (environment-dependent)."""
-    import shutil
-
     from marketing_attribution_etl_framework__maef_spark.sources.io import (
         Warehouse,
         compact_table,
     )
 
-    root = os.path.join(
-        os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/maef_spark_scratch"),
-        ".compact_tmp",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
+    root = scratch_dir(".compact_tmp", os.path.basename(os.path.normpath(sf_dir)))
     wh = Warehouse(spark, root)
     costs = domain.session_costs(spark, sf_dir)
     costs.repartition(16).write.mode("overwrite").parquet(wh.path("session_costs"))
@@ -6486,8 +6445,6 @@ def q_stream_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode plays for the session_window twins L119/L275).  State is
     per-user O(1) (no event buffering), so state volume scales with
     the live-user population, not event volume."""
-    import shutil
-
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as inc
     from marketing_attribution_etl_framework__maef_spark.streaming.sessionize import sessionize
 
@@ -6495,14 +6452,11 @@ def q_stream_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # path rmtree'd on entry would let two concurrent sessions on one
     # host clobber each other's source parquet mid-stream — same key
     # discipline as the journeys/kmeans caches)
-    root = os.path.join(
-        os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/maef_spark_scratch"),
+    root = scratch_dir(
         ".sessionize_state",
         spark.sparkContext.applicationId,
         os.path.basename(os.path.normpath(sf_dir)),
     )
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
     ev = domain.events(spark, sf_dir).select(
         "user_id", "ts", "event_id", "event_type"
     )
@@ -7116,6 +7070,44 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pack_shard_ledger(manifest: DataFrame) -> DataFrame:
+    """One-row (n_manifest, packed_mass, n_seqs, n_shards, shard_mass)
+    reduction of a pack_sequences manifest for the export ledger.
+
+    r12 (guide §2.4 — don't compute the lineage twice): the pack and
+    shard ledger rows both reduce the SAME manifest; one shard-grain
+    pass feeds both (n_manifest = Σ shard counts, packed_mass = Σ shard
+    sums, n_seqs = max of shard maxes + 1 — exact-integer identical to
+    the two separate aggregates by associativity).  An empty manifest
+    packs nothing: n_manifest, packed_mass and n_seqs are 0 there, as in
+    the oracle, while shard_mass stays SQL's NULL sum over no shards."""
+    shard = (
+        F.conv(
+            F.substring(
+                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|pack"))), 1, 15
+            ),
+            16,
+            10,
+        ).cast("long")
+        % 256
+    )
+    return (
+        manifest.groupBy(shard.alias("_s"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("_n"),
+            F.sum("n_chars").cast("long").alias("_c"),
+            F.max("seq_last").alias("_ml"),
+        )
+        .agg(
+            F.coalesce(F.sum("_n"), F.lit(0)).cast("long").alias("n_manifest"),
+            F.coalesce(F.sum("_c"), F.lit(0)).cast("long").alias("packed_mass"),
+            F.coalesce(F.max("_ml") + 1, F.lit(0)).cast("long").alias("n_seqs"),
+            F.count(F.lit(1)).cast("long").alias("n_shards"),
+            F.sum("_c").cast("long").alias("shard_mass"),
+        )
+    )
+
+
 def q_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L310 (VERDICT r09 #5a): the LLM WRITE-PATH e2e gate — curate
     (L20/L96) → train-split → token-budget pack (L137) → hash-shard
@@ -7175,40 +7167,10 @@ def q_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest = pck.pack_sequences(
         train, budget=4096, weight_col="n_tokens"
     )
-    shard = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|pack"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 256
-    )
-    # r12 (guide §2.4 — don't compute the lineage twice): the pack and
-    # shard ledger rows both reduce the SAME manifest; one shard-grain
-    # pass feeds both (n_manifest = Σ shard counts, packed_mass =
-    # Σ shard sums, n_seqs = max of shard maxes + 1 — exact-integer
-    # identical to the two separate aggregates by associativity).
-    pack_shard_agg = (
-        manifest.groupBy(shard.alias("_s"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("_n"),
-            F.sum("n_chars").cast("long").alias("_c"),
-            F.max("seq_last").alias("_ml"),
-        )
-        .agg(
-            F.sum("_n").cast("long").alias("n_manifest"),
-            F.sum("_c").cast("long").alias("packed_mass"),
-            (F.max("_ml") + 1).cast("long").alias("n_seqs"),
-            F.count(F.lit(1)).cast("long").alias("n_shards"),
-            F.sum("_c").cast("long").alias("shard_mass"),
-        )
-    )
     return (
         tot.crossJoin(cur_agg)
         .crossJoin(train_agg)
-        .crossJoin(pack_shard_agg)
+        .crossJoin(_pack_shard_ledger(manifest))
         .selectExpr(
             """stack(4,
               'curate', n_docs_all, n_surv, tokens_all, surv_tokens,

@@ -40,7 +40,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from marketing_attribution_etl_framework__maef_spark import stores
-from marketing_attribution_etl_framework__maef_spark.session import get_spark
+from marketing_attribution_etl_framework__maef_spark.session import get_spark, scratch_dir
 
 GC_EVERY = 6  # timed queries between forced driver GCs
 
@@ -58,7 +58,7 @@ GC_EVERY = 6  # timed queries between forced driver GCs
 # structurally builds state that run 2 then measures the steady cost
 # of.  The old criterion (b) — ">2x slower than its previous driver
 # round on unchanged code", an incident-history admission — is
-# RETIRED: the r10 diagnosis (tools/diag_bench.py) showed no
+# RETIRED: the r10 diagnosis (CLAUDE.md, "Perf rules") showed no
 # cumulative JVM mechanism (code cache 139/243 MB after all 329
 # warm-ups, flat probe latency, suspects fast post-warm-up), so those
 # inflations are transient debris, and the SLOW-TAIL RE-MEASURE pass
@@ -82,7 +82,10 @@ CHECKPOINT_HEAVY = {
     # pressure (r04b: 12.5s official vs 6.4s standalone).
     "maef_warehouse_roundtrip",
     # r05: same profiles — e2e does warehouse parquet writes (IO
-    # one-sided noise), label propagation localCheckpoints per round
+    # one-sided noise), label propagation localCheckpoints per round;
+    # r08: e2e is a five-stage chain with a localCheckpoint'd
+    # attribution and scratch-warehouse sinks, 7.1 s first run vs 3.8 s
+    # warm in the same session (sink + codegen warm-up dominates run 1)
     "maef_pipeline_e2e",
     "rel_label_propagation",
     "maef_peak_concurrency",
@@ -144,10 +147,6 @@ CHECKPOINT_HEAVY = {
     # the candidate docs)
     "llm_multimodal_features",
     "llm_minhash_accuracy",
-    # r08: five-stage chain with a localCheckpoint'd attribution and
-    # scratch-warehouse sinks; 7.1 s first run vs 3.8 s warm in the
-    # same session (sink + codegen warm-up dominates run 1)
-    "maef_pipeline_e2e",
     # r08 staged session stores: the aug-corpus band table
     # (_aug_bands: hot-bucket + cost audits) and the streaming session
     # table (_stream_sessions: bounce + depth twins) — run 1 builds the
@@ -329,11 +328,7 @@ def main() -> None:
     # only; no timing methodology changes.
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as _inc
 
-    _warm_src = os.path.join(
-        os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/maef_spark_scratch"),
-        ".bench_stream_warm",
-        spark.sparkContext.applicationId,
-    )
+    _warm_src = scratch_dir(".bench_stream_warm", spark.sparkContext.applicationId)
     spark.range(1).selectExpr("id AS user_id").write.mode("overwrite").parquet(_warm_src)
     _inc.run_to_memory(
         spark.readStream.schema("user_id long").parquet(_warm_src).groupBy("user_id").count(),

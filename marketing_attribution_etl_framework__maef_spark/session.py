@@ -9,8 +9,22 @@ just sized here for local[32].
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import SparkSession
+
+
+def scratch_dir(*parts: str) -> str:
+    """A fresh, empty directory under the scratch root
+    ($SPARK_GRAFT_SCRATCH, default /tmp/maef_spark_scratch): whatever a
+    previous run left at ``root/parts...`` is removed first.  The root
+    lives outside the repo tree so query side files never dirty it."""
+    path = os.path.join(
+        os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/maef_spark_scratch"), *parts
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path, exist_ok=True)
+    return path
 
 
 def get_spark(app_name: str = "maef_spark", shuffle_partitions: int | None = None) -> SparkSession:

@@ -132,6 +132,17 @@ def test_export_pipeline_ledger_carries_mass(spark, sf_dir):
     assert rows["split_train"]["n_out"] <= rows["split_train"]["n_in"]
 
 
+def test_pack_shard_ledger_on_empty_manifest_matches_oracle(spark):
+    import __spark_entry__ as entry
+
+    docs = spark.createDataFrame([], "doc_id long, n_tokens long")
+    manifest = pck.pack_sequences(docs, budget=4096, weight_col="n_tokens")
+    row = entry._pack_shard_ledger(manifest).collect()
+    # the oracle's packagg reads 0 manifest rows, 0 mass and 0 sequences
+    # off an empty train split; SUM over zero shards stays NULL
+    assert [tuple(r) for r in row] == [(0, 0, 0, 0, None)]
+
+
 # --------------------------------------------------------- PII audit
 
 

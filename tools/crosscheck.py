@@ -10,11 +10,12 @@ Usage: python tools/crosscheck.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from marketing_attribution_etl_framework__maef_spark.session import get_spark

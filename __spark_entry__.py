@@ -68,7 +68,7 @@ from marketing_attribution_etl_framework__maef_spark.operators import segmentati
 from marketing_attribution_etl_framework__maef_spark.operators import survival as surv
 from marketing_attribution_etl_framework__maef_spark.plans.pipeline import AttributionPipeline, PipelineConfig
 from marketing_attribution_etl_framework__maef_spark.sources import bucketed as bkt
-from marketing_attribution_etl_framework__maef_spark.session import scratch_dir
+from marketing_attribution_etl_framework__maef_spark.session import scratch_dir, transient_scratch_dir
 from marketing_attribution_etl_framework__maef_spark.stores import staged
 
 LOOKBACK_DAYS = 30
@@ -580,6 +580,27 @@ def q_cleaning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _run_stream_store(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    make: Callable,
+    stream: DataFrame,
+    serve: Callable,
+) -> DataFrame:
+    """Run the foreachBatch driver ``make(root)`` over ``stream`` to
+    completion and return ``serve(driver)`` localCheckpoint'd.  The
+    root is a fresh scratch dir keyed by application id and sf (ADVICE
+    r09: two sessions on one host must never share one) and is removed
+    before returning, so no stream state outlives its query."""
+    with transient_scratch_dir(
+        ".stream", name, spark.sparkContext.applicationId, os.path.basename(os.path.normpath(sf_dir))
+    ) as root:
+        drv = make(root)
+        drv.start(stream).awaitTermination()
+        return serve(drv).localCheckpoint()
+
+
 def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.9(a) / L26 as a correctness-gated query: Structured
     Streaming file-source intake of the events parquet ->
@@ -591,25 +612,21 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights are single divisions (1/n), so parity is bitwise, not
     approximate.
 
-    State (session store, attribution table, checkpoint) lives under
-    the repo-local ``.stream_tmp`` scratch dir and is wiped per run so
-    the query is idempotent across invocations."""
-    import shutil
-
+    State (session store, attribution table, checkpoint) lives in a
+    scratch dir that exists only while the query runs
+    (``_run_stream_store``)."""
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as inc
 
-    root = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".stream_tmp",
-        os.path.basename(os.path.normpath(sf_dir)),
+    return _run_stream_store(
+        spark,
+        sf_dir,
+        "attribution",
+        lambda root: inc.IncrementalAttribution(
+            spark, root, model="linear", lookback_days=LOOKBACK_DAYS, strict_before=False
+        ),
+        inc.stream_events_nanos(spark, f"{sf_dir}/events.parquet"),
+        inc.IncrementalAttribution.attribution,
     )
-    shutil.rmtree(root, ignore_errors=True)
-    drv = inc.IncrementalAttribution(
-        spark, root, model="linear", lookback_days=LOOKBACK_DAYS, strict_before=False
-    )
-    ev = inc.stream_events_nanos(spark, f"{sf_dir}/events.parquet")
-    drv.start(ev).awaitTermination()
-    return drv.attribution()
 
 
 def q_stream_windowed_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1733,20 +1750,16 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     summed sketch must equal the batch sketch cell for cell (addition
     is associative), so the batch CMS SQL is the oracle — the
     streaming/batch-parity pattern of maef_stream_attribution."""
-    import shutil
-
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as inc
 
-    root = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".stream_tmp",
-        "cms_" + os.path.basename(os.path.normpath(sf_dir)),
+    return _run_stream_store(
+        spark,
+        sf_dir,
+        "cms",
+        lambda root: inc.IncrementalCMS(spark, root, value_col="user_id"),
+        inc.stream_events_nanos(spark, f"{sf_dir}/events.parquet"),
+        inc.IncrementalCMS.sketch,
     )
-    shutil.rmtree(root, ignore_errors=True)
-    drv = inc.IncrementalCMS(spark, root, value_col="user_id")
-    ev = inc.stream_events_nanos(spark, f"{sf_dir}/events.parquet")
-    drv.start(ev).awaitTermination()
-    return drv.sketch()
 
 
 def q_data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5318,38 +5331,32 @@ def q_stream_cdc_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     compactable to the distinct-chunk count at any time; no per-key
     streaming state, no watermark (streaming/incremental.py
     IncrementalChunkStore docstring has the scale argument)."""
-    import shutil
-
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as inc
 
-    root = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".stream_tmp",
-        "cdc_store_" + os.path.basename(os.path.normpath(sf_dir)),
+    return _run_stream_store(
+        spark,
+        sf_dir,
+        "cdc_store",
+        lambda root: inc.IncrementalChunkStore(spark, root),
+        inc.stream_documents(spark, f"{sf_dir}/documents.parquet"),
+        lambda drv: (
+            drv.store()
+            .groupBy(F.col("owner_source").alias("source"))
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("owned_chunks"),
+                F.sum("n_occurrences").cast("long").alias("owned_occurrences"),
+            )
+            .select(
+                "source",
+                "owned_chunks",
+                "owned_occurrences",
+                F.expr(
+                    "cast((2 * owned_occurrences * 1048576 + owned_chunks)"
+                    " div (2 * owned_chunks) as bigint)"
+                ).alias("dup_pull_q20"),
+            )
+        ),
     )
-    shutil.rmtree(root, ignore_errors=True)
-    drv = inc.IncrementalChunkStore(spark, root)
-    docs = inc.stream_documents(spark, f"{sf_dir}/documents.parquet")
-    drv.start(docs).awaitTermination()
-    out = (
-        drv.store()
-        .groupBy(F.col("owner_source").alias("source"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("owned_chunks"),
-            F.sum("n_occurrences").cast("long").alias("owned_occurrences"),
-        )
-        .select(
-            "source",
-            "owned_chunks",
-            "owned_occurrences",
-            F.expr(
-                "cast((2 * owned_occurrences * 1048576 + owned_chunks)"
-                " div (2 * owned_chunks) as bigint)"
-            ).alias("dup_pull_q20"),
-        )
-        .localCheckpoint()
-    )
-    return out
 
 
 def q_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6043,33 +6050,28 @@ def q_stream_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch term table.  Serving output: per first-doc decile,
     distinct terms owned and their corpus-wide occurrence mass
     (streaming/incremental.py IncrementalVocabStore)."""
-    import shutil
-
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as inc
 
-    root = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".stream_tmp",
-        "vocab_store_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    drv = inc.IncrementalVocabStore(spark, root)
-    docs = inc.stream_documents(spark, f"{sf_dir}/documents.parquet")
-    drv.start(docs).awaitTermination()
     mx = _docs(spark, sf_dir).agg(F.max("doc_id").cast("long").alias("_mx"))
-    return (
-        drv.store()
-        .crossJoin(F.broadcast(mx))
-        .select(
-            F.expr("cast(least(9, first_doc * 10 div (_mx + 1)) as long)").alias("bucket"),
-            "n_occurrences",
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_terms"),
-            F.sum("n_occurrences").cast("long").alias("n_occurrences"),
-        )
-        .localCheckpoint()
+    return _run_stream_store(
+        spark,
+        sf_dir,
+        "vocab_store",
+        lambda root: inc.IncrementalVocabStore(spark, root),
+        inc.stream_documents(spark, f"{sf_dir}/documents.parquet"),
+        lambda drv: (
+            drv.store()
+            .crossJoin(F.broadcast(mx))
+            .select(
+                F.expr("cast(least(9, first_doc * 10 div (_mx + 1)) as long)").alias("bucket"),
+                "n_occurrences",
+            )
+            .groupBy("bucket")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_terms"),
+                F.sum("n_occurrences").cast("long").alias("n_occurrences"),
+            )
+        ),
     )
 
 
@@ -6448,15 +6450,6 @@ def q_stream_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as inc
     from marketing_attribution_etl_framework__maef_spark.streaming.sessionize import sessionize
 
-    # scratch keyed by applicationId + sf (ADVICE r09: a fixed shared
-    # path rmtree'd on entry would let two concurrent sessions on one
-    # host clobber each other's source parquet mid-stream — same key
-    # discipline as the journeys/kmeans caches)
-    root = scratch_dir(
-        ".sessionize_state",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
     ev = domain.events(spark, sf_dir).select(
         "user_id", "ts", "event_id", "event_type"
     )
@@ -6472,35 +6465,45 @@ def q_stream_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("zz_flush").alias("event_type"),
         )
     )
-    src = os.path.join(root, "src")
-    # ONE file -> availableNow processes everything in one micro-batch,
-    # so every sentinel sorts after its user's real events inside the
-    # operator's per-group (ts, _tb) sort.
-    ev.unionByName(sent).coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(
-        "user_id long, ts timestamp, event_id long, event_type string"
-    ).parquet(src)
-    out = sessionize(
-        stream,
-        gap_minutes=30,
-        max_events=20,
-        watermark="0 seconds",
-        tiebreak="event_id",
-    )
-    # partitions = the local core count, unlike the bounded-state
-    # twins' 8: wall here is the per-event Python loop inside
-    # applyInPandasWithState (the operator IS the Python path), so
-    # state partitions = Python workers; fewer left cores idle
-    # (measured 8.6 s at 16, 6.7 s at 32 for the stream alone at
-    # sf0.1 on local[32]).  Derived from defaultParallelism rather
-    # than a literal 32 so the driver's lower-core scaling runs keep
-    # the same workers-per-core ratio (r11).
-    res = inc.run_to_memory(
-        out,
-        "stream_sessionize_state_sink",
-        partitions=spark.sparkContext.defaultParallelism,
-        output_mode="append",
-    )
+    # scratch keyed by applicationId + sf (ADVICE r09: a fixed shared
+    # path rmtree'd on entry would let two concurrent sessions on one
+    # host clobber each other's source parquet mid-stream — same key
+    # discipline as the journeys/kmeans caches); removed once the
+    # sink's result is localCheckpoint'd
+    with transient_scratch_dir(
+        ".sessionize_state",
+        spark.sparkContext.applicationId,
+        os.path.basename(os.path.normpath(sf_dir)),
+    ) as root:
+        src = os.path.join(root, "src")
+        # ONE file -> availableNow processes everything in one micro-batch,
+        # so every sentinel sorts after its user's real events inside the
+        # operator's per-group (ts, _tb) sort.
+        ev.unionByName(sent).coalesce(1).write.mode("overwrite").parquet(src)
+        stream = spark.readStream.schema(
+            "user_id long, ts timestamp, event_id long, event_type string"
+        ).parquet(src)
+        out = sessionize(
+            stream,
+            gap_minutes=30,
+            max_events=20,
+            watermark="0 seconds",
+            tiebreak="event_id",
+        )
+        # partitions = the local core count, unlike the bounded-state
+        # twins' 8: wall here is the per-event Python loop inside
+        # applyInPandasWithState (the operator IS the Python path), so
+        # state partitions = Python workers; fewer left cores idle
+        # (measured 8.6 s at 16, 6.7 s at 32 for the stream alone at
+        # sf0.1 on local[32]).  Derived from defaultParallelism rather
+        # than a literal 32 so the driver's lower-core scaling runs keep
+        # the same workers-per-core ratio (r11).
+        res = inc.run_to_memory(
+            out,
+            "stream_sessionize_state_sink",
+            partitions=spark.sparkContext.defaultParallelism,
+            output_mode="append",
+        )
     return res.filter(F.col("channels") != "zz_flush").select(
         "user_id",
         F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
@@ -7200,27 +7203,16 @@ def q_stream_ann_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of micro-batch slicing) and is gated by the SAME
     batch-assignment aggregate the IVF index implies
     (streaming/incremental.py IncrementalANNStore)."""
-    import shutil
-
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as inc
 
-    root = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".stream_tmp",
-        "ann_store_"
-        + spark.sparkContext.applicationId
-        + "_"
-        + os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    e = _embs(spark, sf_dir)
-    drv = inc.IncrementalANNStore(spark, root, e.filter(F.col("vec_id") < 8))
-    vecs = inc.stream_embeddings(spark, f"{sf_dir}/embeddings.parquet")
-    drv.start(vecs).awaitTermination()
-    return (
-        drv.store()
-        .select("centroid_id", "n_vectors", "min_vec_id", "max_vec_id", "sum_cos_q20")
-        .localCheckpoint()
+    cents = _embs(spark, sf_dir).filter(F.col("vec_id") < 8)
+    return _run_stream_store(
+        spark,
+        sf_dir,
+        "ann_store",
+        lambda root: inc.IncrementalANNStore(spark, root, cents),
+        inc.stream_embeddings(spark, f"{sf_dir}/embeddings.parquet"),
+        inc.IncrementalANNStore.store,
     )
 
 
@@ -7840,23 +7832,16 @@ def q_stream_export_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions — the streaming ledger must match bit for bit.  The
     corpus-global dedup stages stay with the staged pair store (L310
     gates them); see IncrementalExportLedger's docstring."""
-    import shutil
-
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as inc
 
-    root = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".stream_tmp",
-        "export_ledger_"
-        + spark.sparkContext.applicationId
-        + "_"
-        + os.path.basename(os.path.normpath(sf_dir)),
+    return _run_stream_store(
+        spark,
+        sf_dir,
+        "export_ledger",
+        lambda root: inc.IncrementalExportLedger(spark, root),
+        inc.stream_documents(spark, f"{sf_dir}/documents.parquet"),
+        inc.IncrementalExportLedger.ledger,
     )
-    shutil.rmtree(root, ignore_errors=True)
-    drv = inc.IncrementalExportLedger(spark, root)
-    docs = inc.stream_documents(spark, f"{sf_dir}/documents.parquet")
-    drv.start(docs).awaitTermination()
-    return drv.ledger().select("split", "n_docs", "n_tokens").localCheckpoint()
 
 
 def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8097,20 +8082,8 @@ def q_stream_repeat_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay); the live gate re-aggregates under SUM/SUM/SUM.  Gated by
     a batch recompute of the identical expressions
     (streaming/incremental.py IncrementalRepeatGate)."""
-    import shutil
-
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as inc
 
-    root = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".stream_tmp",
-        "repeat_gate_"
-        + spark.sparkContext.applicationId
-        + "_"
-        + os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    drv = inc.IncrementalRepeatGate(spark, root)
     raw = inc.stream_documents(spark, f"{sf_dir}/documents.parquet")
     w = txt.words(txt.normalize_text(F.col("text")))
     n = F.size(w)
@@ -8123,10 +8096,14 @@ def q_stream_repeat_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    drv.start(docs).awaitTermination()
-    return drv.gate().select(
-        "source", "n_docs", "n_flagged", "rep_instances"
-    ).localCheckpoint()
+    return _run_stream_store(
+        spark,
+        sf_dir,
+        "repeat_gate",
+        lambda root: inc.IncrementalRepeatGate(spark, root),
+        docs,
+        inc.IncrementalRepeatGate.gate,
+    )
 
 
 def q_stream_contamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8143,26 +8120,20 @@ def q_stream_contamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     text as llm_contamination_rate — the live contamination dashboard
     must reproduce the batch audit bit for bit
     (streaming/incremental.py IncrementalContaminationGate)."""
-    import shutil
-
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as inc
 
-    root = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".stream_tmp",
-        "contamination_gate_"
-        + spark.sparkContext.applicationId
-        + "_"
-        + os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(root, ignore_errors=True)
     ev = domain.load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 == 0
     )
-    drv = inc.IncrementalContaminationGate(spark, root, ev)
     raw = inc.stream_documents(spark, f"{sf_dir}/documents.parquet")
-    drv.start(raw.filter(F.col("doc_id") % 10 != 0)).awaitTermination()
-    return drv.gate().localCheckpoint()
+    return _run_stream_store(
+        spark,
+        sf_dir,
+        "contamination_gate",
+        lambda root: inc.IncrementalContaminationGate(spark, root, ev),
+        raw.filter(F.col("doc_id") % 10 != 0),
+        inc.IncrementalContaminationGate.gate,
+    )
 
 
 def q_gate_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:

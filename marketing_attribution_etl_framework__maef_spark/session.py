@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -25,6 +27,25 @@ def scratch_dir(*parts: str) -> str:
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
     return path
+
+
+@contextmanager
+def transient_scratch_dir(*parts: str) -> Iterator[str]:
+    """``scratch_dir(*parts)`` for the length of a ``with`` block.  On
+    exit the directory is removed, and so is each parent below the
+    scratch root that it leaves empty, so nothing the block wrote
+    outlives it."""
+    path = scratch_dir(*parts)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+        for _ in parts[1:]:
+            path = os.path.dirname(path)
+            try:
+                os.rmdir(path)
+            except OSError:  # not empty: a concurrent run's dir lives there
+                break
 
 
 def get_spark(app_name: str = "maef_spark", shuffle_partitions: int | None = None) -> SparkSession:

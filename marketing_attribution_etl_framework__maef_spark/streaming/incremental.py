@@ -16,6 +16,9 @@ This module re-expresses that contract on Structured Streaming:
   seen so far, bounded by the journey lookback), and results are
   idempotently upserted into the attribution table, exactly like the
   reference's INSERT OR REPLACE loader (``src/etl/load.py:125-143``).
+- ``StreamDriver`` / ``PartStore``: the one foreachBatch mechanism the
+  drivers share — an availableNow ``start``, and for the merge-law
+  stores batch_id-keyed idempotent parts re-aggregated on read.
 
 Semantics: a conversion is attributed in the micro-batch where it
 arrives, against sessions ingested up to and including that batch.
@@ -40,9 +43,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from marketing_attribution_etl_framework__maef_spark import domain, schemas
+from marketing_attribution_etl_framework__maef_spark.llm import dedup as dd
+from marketing_attribution_etl_framework__maef_spark.llm import similarity as sim
+from marketing_attribution_etl_framework__maef_spark.llm import text as txt
+from marketing_attribution_etl_framework__maef_spark.llm.curation import split_assign
 from marketing_attribution_etl_framework__maef_spark.operators import attribution as attr
 from marketing_attribution_etl_framework__maef_spark.operators import journeys as jny
 from marketing_attribution_etl_framework__maef_spark.operators import loader as ldr
+from marketing_attribution_etl_framework__maef_spark.operators import sketches
 
 
 def run_to_memory(
@@ -88,6 +96,28 @@ def run_to_memory(
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def _file_stream(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType | None,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    """FileStreamSource read of the parquet files at ``path``; a
+    ``schema`` of None is peeked from the files' footers (no data
+    scan).  FileStreamSource requires a directory (or glob) source
+    path: a bare file fails with "Option 'basePath' must be a
+    directory", so the harness's single-file layout is rewritten as a
+    glob, which anchors basePath at the parent directory."""
+    if path.endswith(".parquet") and not os.path.isdir(path):
+        path = os.path.join(os.path.dirname(path), os.path.basename(path).replace(".parquet", "*.parquet"))
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path)
+
+
 def stream_events(
     spark: SparkSession,
     path: str,
@@ -97,10 +127,9 @@ def stream_events(
     """Streaming read of events-shaped parquet files with an event-time
     watermark (bounds how late a record may arrive and still join a
     windowed aggregate)."""
-    reader = spark.readStream.schema(schemas.EVENTS)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path).withWatermark("ts", watermark)
+    return _file_stream(spark, path, schemas.EVENTS, max_files_per_trigger).withWatermark(
+        "ts", watermark
+    )
 
 
 def stream_documents(
@@ -112,18 +141,7 @@ def stream_documents(
     side of the ingest-time chunk-store / dedup twins.  Documents have
     no event time, so there is no watermark; the downstream consumers
     (IncrementalChunkStore) are order-independent by construction."""
-    if path.endswith(".parquet") and not os.path.isdir(path):
-        # FileStreamSource requires a directory/glob source path (see
-        # stream_events_nanos): rewrite the single-file layout as a
-        # glob anchored at the parent directory.
-        path = os.path.join(
-            os.path.dirname(path),
-            os.path.basename(path).replace(".parquet", "*.parquet"),
-        )
-    reader = spark.readStream.schema(schemas.DOCUMENTS)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return _file_stream(spark, path, schemas.DOCUMENTS, max_files_per_trigger)
 
 
 def stream_embeddings(
@@ -135,18 +153,77 @@ def stream_embeddings(
     side of the ANN ingest-store twin (IncrementalANNStore).  Vectors
     have no event time, so no watermark; the downstream store's merge
     law is order-independent by construction."""
-    if path.endswith(".parquet") and not os.path.isdir(path):
-        path = os.path.join(
-            os.path.dirname(path),
-            os.path.basename(path).replace(".parquet", "*.parquet"),
+    return _file_stream(spark, path, schemas.EMBEDDINGS, max_files_per_trigger)
+
+
+class StreamDriver:
+    """A ``foreachBatch`` driver whose state lives under one directory,
+    ``root``.  ``start`` attaches ``self.process_batch`` to a streaming
+    DataFrame under ``trigger(availableNow=True)`` (backfill semantics:
+    drain what is there, then stop) and checkpoints under ``root``
+    unless given ``checkpoint``.  The sink is looked up on ``self``, so
+    a subclass that overrides ``process_batch`` (a tracing or fault-
+    injecting wrapper) sees every micro-batch."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark = spark
+        self.root = root
+        os.makedirs(root, exist_ok=True)
+
+    def _path(self, name: str) -> str:
+        return os.path.join(self.root, name)
+
+    def start(self, stream: DataFrame, checkpoint: str | None = None):
+        writer = (
+            stream.writeStream.foreachBatch(self.process_batch)
+            .option("checkpointLocation", checkpoint or self._path("_checkpoint"))
+            .trigger(availableNow=True)
         )
-    reader = spark.readStream.schema(schemas.EMBEDDINGS)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+        return writer.start()
 
 
-class IncrementalANNStore:
+class PartStore(StreamDriver):
+    """A merge-law part store: each micro-batch reduces to a small part
+    table (``part``) written under ``parts/batch_id=N``, and the live
+    store (``store``) re-aggregates every part: ``groupBy(*KEY)`` with
+    ``MERGE[c](c)`` for each column ``c``.  Every MERGE reducer is
+    associative AND commutative, so the store is independent of how
+    the source slices the stream into micro-batches — which is what
+    lets a static-input availableNow run be oracle-gated against the
+    batch recompute.  No per-key streaming state, no watermark; the
+    parts are compactable to the key count at any time by rewriting
+    the aggregated table.
+
+    foreachBatch is at-least-once: a micro-batch replayed after a
+    mid-run failure (resume from checkpoint) re-enters
+    ``process_batch`` with the SAME batch_id.  Writing each part to its
+    batch_id-keyed subdir in overwrite mode makes the replay replace
+    its own part instead of double-counting a SUM.
+
+    A store declares its KEY, its MERGE and ``part``; the write, the
+    read and the re-aggregate live here."""
+
+    KEY: tuple[str, ...] = ()
+    MERGE: dict = {}
+
+    def part(self, batch_df: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        self.part(batch_df).write.mode("overwrite").parquet(
+            os.path.join(self._path("parts"), f"batch_id={int(batch_id)}")
+        )
+
+    def store(self) -> DataFrame:
+        """The live store: one row per KEY."""
+        return (
+            self.spark.read.parquet(self._path("parts"))
+            .groupBy(*self.KEY)
+            .agg(*(law(c).alias(c) for c, law in self.MERGE.items()))
+        )
+
+
+class IncrementalANNStore(PartStore):
     """Streaming maintenance of the ANN ingest-side CLUSTER LEDGER —
     the per-cluster statistics an IVF index needs kept live while
     vectors stream in (VERDICT r09 #5b; the L244/L277 foreachBatch
@@ -178,12 +255,11 @@ class IncrementalANNStore:
     norm vectors are dropped (no direction to assign — the
     quantized_unit_vectors convention)."""
 
-    def __init__(self, spark: SparkSession, root: str, centroids: DataFrame):
-        from marketing_attribution_etl_framework__maef_spark.llm import similarity as sim
+    KEY = ("centroid_id",)
+    MERGE = {"n_vectors": F.sum, "min_vec_id": F.min, "max_vec_id": F.max, "sum_cos_q20": F.sum}
 
-        self.spark = spark
-        self.root = root
-        self._sim = sim
+    def __init__(self, spark: SparkSession, root: str, centroids: DataFrame):
+        super().__init__(spark, root)
         # centroids are bounded (n_centroids rows) — collect once and
         # rebuild per batch so the foreachBatch closure never captures
         # a DataFrame tied to the outer query's lineage
@@ -191,13 +267,8 @@ class IncrementalANNStore:
             (int(r["vec_id"]), [float(x) for x in r["embedding"]])
             for r in centroids.select("vec_id", "embedding").collect()
         ]
-        os.makedirs(root, exist_ok=True)
 
-    def _parts(self) -> str:
-        return os.path.join(self.root, "ann_parts")
-
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        sim = self._sim
+    def part(self, batch_df: DataFrame) -> DataFrame:
         cents = self.spark.createDataFrame(
             self._cent_rows, "vec_id long, embedding array<double>"
         )
@@ -212,40 +283,11 @@ class IncrementalANNStore:
         best = scored.withColumn("_rn", F.row_number().over(w)).filter(
             F.col("_rn") == 1
         )
-        part = best.groupBy("centroid_id").agg(
+        return best.groupBy("centroid_id").agg(
             F.count(F.lit(1)).cast("long").alias("n_vectors"),
             F.min("vec_id").cast("long").alias("min_vec_id"),
             F.max("vec_id").cast("long").alias("max_vec_id"),
             F.sum(sim.q20(F.col("_cs"))).cast("long").alias("sum_cos_q20"),
-        )
-        # foreachBatch is at-least-once: a micro-batch replayed after a
-        # mid-run failure (resume from checkpoint) re-enters here with the
-        # SAME batch_id.  Writing each part to a batch_id-keyed subdir in
-        # overwrite mode makes the replay idempotent — the re-run replaces
-        # its own part instead of double-counting n_vectors/sum_cos_q20.
-        part.write.mode("overwrite").parquet(
-            os.path.join(self._parts(), f"batch_id={int(batch_id)}")
-        )
-
-    def start(self, vectors: DataFrame, checkpoint: str | None = None):
-        writer = (
-            vectors.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint or os.path.join(self.root, "_ckpt"))
-            .trigger(availableNow=True)
-        )
-        return writer.start()
-
-    def store(self) -> DataFrame:
-        """The live cluster ledger: one row per centroid."""
-        return (
-            self.spark.read.parquet(self._parts())
-            .groupBy("centroid_id")
-            .agg(
-                F.sum("n_vectors").cast("long").alias("n_vectors"),
-                F.min("min_vec_id").cast("long").alias("min_vec_id"),
-                F.max("max_vec_id").cast("long").alias("max_vec_id"),
-                F.sum("sum_cos_q20").cast("long").alias("sum_cos_q20"),
-            )
         )
 
 
@@ -263,20 +305,11 @@ def stream_events_nanos(
     FileStreamSource needs a declared schema, so the file schema is
     peeked with a batch footer read first — no data scan."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if path.endswith(".parquet") and not os.path.isdir(path):
-        # FileStreamSource requires a directory (or glob) source path:
-        # a bare file fails with "Option 'basePath' must be a
-        # directory". Rewrite the harness's single-file layout as a
-        # glob, which anchors basePath at the parent directory.
-        path = os.path.join(os.path.dirname(path), os.path.basename(path).replace(".parquet", "*.parquet"))
-    file_schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(file_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    out = reader.parquet(path)
-    if isinstance(file_schema["ts"].dataType, T.LongType):
+    out = _file_stream(spark, path, None, max_files_per_trigger)
+    ts_type = out.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
         out = out.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(file_schema["ts"].dataType, T.TimestampNTZType):
+    elif isinstance(ts_type, T.TimestampNTZType):
         # watermarks require TIMESTAMP; with the session pinned to UTC
         # (session.py) this cast is an identity on the stored micros
         out = out.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -351,7 +384,7 @@ def windowed_channel_volume(events: DataFrame, window: str = "1 day") -> DataFra
     )
 
 
-class IncrementalAttribution:
+class IncrementalAttribution(StreamDriver):
     """foreachBatch driver: micro-batch -> session store append ->
     attribute new conversions -> upsert attribution table."""
 
@@ -366,15 +399,10 @@ class IncrementalAttribution:
         lookback_days: int | None = 30,
         strict_before: bool = False,
     ):
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root)
         self.model = model
         self.lookback_days = lookback_days
         self.strict_before = strict_before
-        os.makedirs(root, exist_ok=True)
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self.root, name)
 
     def _read_or_empty(self, name: str, schema) -> DataFrame:
         p = self._path(name)
@@ -421,16 +449,6 @@ class IncrementalAttribution:
         final = self._path(self.ATTRIBUTION)
         shutil.rmtree(final, ignore_errors=True)
         os.replace(tmp, final)
-
-    def start(self, events: DataFrame, checkpoint: str | None = None):
-        """Attach to a streaming events DataFrame. Use
-        ``trigger(availableNow=True)`` semantics for backfill runs."""
-        writer = (
-            events.writeStream.foreachBatch(self.process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint or self._path("_checkpoint"))
-        )
-        return writer.start()
 
     def attribution(self) -> DataFrame:
         return self.spark.read.parquet(self._path(self.ATTRIBUTION))
@@ -480,7 +498,7 @@ def stream_journey_join(
     )
 
 
-class IncrementalCMS:
+class IncrementalCMS(PartStore):
     """Streaming maintenance of a Count-Min sketch
     (operators/sketches.py): each micro-batch's cell table is appended
     to a parquet part store, and the live sketch is the cellwise SUM
@@ -495,6 +513,9 @@ class IncrementalCMS:
     difference. That is the oracle for ``maef_stream_cms``.
     """
 
+    KEY = ("row", "bucket")
+    MERGE = {"cnt": F.sum}
+
     def __init__(
         self,
         spark: SparkSession,
@@ -503,49 +524,23 @@ class IncrementalCMS:
         d: int = 4,
         w: int = 256,
     ):
-        from marketing_attribution_etl_framework__maef_spark.operators import sketches
-
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root)
         self.value_col = value_col
         self.d = d
         self.w = w
-        self._sketches = sketches
-        os.makedirs(root, exist_ok=True)
 
-    def _parts(self) -> str:
-        return os.path.join(self.root, "cms_parts")
-
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        cells = self._sketches.cms_table(
+    def part(self, batch_df: DataFrame) -> DataFrame:
+        return sketches.cms_table(
             batch_df.select(F.col(self.value_col).cast("string").alias("_v")),
             "_v",
             d=self.d,
             w=self.w,
         )
-        # batch_id-keyed overwrite: idempotent under at-least-once replay
-        # (cnt is a SUM — an appended replay would double-count).
-        cells.write.mode("overwrite").parquet(
-            os.path.join(self._parts(), f"batch_id={int(batch_id)}")
-        )
 
-    def start(self, events: DataFrame, checkpoint: str | None = None):
-        writer = (
-            events.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint or os.path.join(self.root, "_ckpt"))
-            .trigger(availableNow=True)
-        )
-        return writer.start()
-
-    def sketch(self) -> DataFrame:
-        return (
-            self.spark.read.parquet(self._parts())
-            .groupBy("row", "bucket")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-        )
+    sketch = PartStore.store
 
 
-class IncrementalChunkStore:
+class IncrementalChunkStore(PartStore):
     """Streaming maintenance of the CDC chunk store (llm/dedup.py
     cdc_doc_chunks) — the ingest-time face of the L231/L239 family,
     the way maef_stream_dedup is L8's: documents arrive as a stream,
@@ -569,60 +564,30 @@ class IncrementalChunkStore:
     serving aggregate shuffles once on the 128-bit chunk hash.
     """
 
-    def __init__(self, spark: SparkSession, root: str, w: int = 3, modulus: int = 8):
-        from marketing_attribution_etl_framework__maef_spark.llm import dedup as dd
+    KEY = ("chunk_md5",)
+    # _o = struct(doc_id, source): MIN orders by doc_id, then source
+    MERGE = {"_o": F.min, "n_occurrences": F.sum}
 
-        self.spark = spark
-        self.root = root
+    def __init__(self, spark: SparkSession, root: str, w: int = 3, modulus: int = 8):
+        super().__init__(spark, root)
         self.w = w
         self.modulus = modulus
-        self._dd = dd
-        os.makedirs(root, exist_ok=True)
 
-    def _parts(self) -> str:
-        return os.path.join(self.root, "chunk_parts")
-
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        chunks = self._dd.cdc_doc_chunks(batch_df, w=self.w, modulus=self.modulus)
-        part = chunks.groupBy("chunk_md5").agg(
+    def part(self, batch_df: DataFrame) -> DataFrame:
+        chunks = dd.cdc_doc_chunks(batch_df, w=self.w, modulus=self.modulus)
+        return chunks.groupBy("chunk_md5").agg(
             F.min(F.struct("doc_id", "source")).alias("_o"),
             F.count(F.lit(1)).cast("long").alias("n_occurrences"),
         )
-        part.select(
-            "chunk_md5",
-            F.col("_o.doc_id").alias("owner_doc"),
-            F.col("_o.source").alias("owner_source"),
-            "n_occurrences",
-        ).write.mode("overwrite").parquet(
-            # batch_id-keyed overwrite: idempotent under at-least-once
-            # replay (n_occurrences is a SUM).
-            os.path.join(self._parts(), f"batch_id={int(batch_id)}")
-        )
-
-    def start(self, docs: DataFrame, checkpoint: str | None = None):
-        writer = (
-            docs.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint or os.path.join(self.root, "_ckpt"))
-            .trigger(availableNow=True)
-        )
-        return writer.start()
 
     def store(self) -> DataFrame:
         """The live chunk store: one row per distinct chunk with its
         corpus-wide owner and total occurrence count."""
-        return (
-            self.spark.read.parquet(self._parts())
-            .groupBy("chunk_md5")
-            .agg(
-                F.min(F.struct("owner_doc", "owner_source")).alias("_o"),
-                F.sum("n_occurrences").cast("long").alias("n_occurrences"),
-            )
-            .select(
-                "chunk_md5",
-                F.col("_o.owner_doc").alias("owner_doc"),
-                F.col("_o.owner_source").alias("owner_source"),
-                "n_occurrences",
-            )
+        return super().store().select(
+            "chunk_md5",
+            F.col("_o.doc_id").alias("owner_doc"),
+            F.col("_o.source").alias("owner_source"),
+            "n_occurrences",
         )
 
 
@@ -719,7 +684,7 @@ def funnel_from_first_touch(state: DataFrame, n_steps: int) -> DataFrame:
     )
 
 
-class IncrementalVocabStore:
+class IncrementalVocabStore(PartStore):
     """Streaming maintenance of the corpus VOCABULARY store — the
     ingest-time face of the Heaps vocabulary-growth curve (llm/text.py
     vocab_growth), the way IncrementalChunkStore is L231's: documents
@@ -741,58 +706,21 @@ class IncrementalVocabStore:
     terms per ingest slice, occurrence mass per novelty decile.
     """
 
-    def __init__(self, spark: SparkSession, root: str):
-        from marketing_attribution_etl_framework__maef_spark.llm.text import (
-            normalize_text,
-            words,
-        )
+    KEY = ("term",)
+    MERGE = {"first_doc": F.min, "n_occurrences": F.sum}
 
-        self.spark = spark
-        self.root = root
-        self._normalize_text = normalize_text
-        self._words = words
-        os.makedirs(root, exist_ok=True)
-
-    def _parts(self) -> str:
-        return os.path.join(self.root, "vocab_parts")
-
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def part(self, batch_df: DataFrame) -> DataFrame:
         ex = batch_df.select(
             "doc_id",
-            F.explode(self._words(self._normalize_text(F.col("text")))).alias("term"),
+            F.explode(txt.words(txt.normalize_text(F.col("text")))).alias("term"),
         ).filter(F.col("term") != "")
-        part = ex.groupBy("term").agg(
+        return ex.groupBy("term").agg(
             F.min("doc_id").cast("long").alias("first_doc"),
             F.count(F.lit(1)).cast("long").alias("n_occurrences"),
         )
-        # batch_id-keyed overwrite: idempotent under at-least-once replay
-        # (n_occurrences is a SUM).
-        part.write.mode("overwrite").parquet(
-            os.path.join(self._parts(), f"batch_id={int(batch_id)}")
-        )
-
-    def start(self, docs: DataFrame, checkpoint: str | None = None):
-        writer = (
-            docs.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint or os.path.join(self.root, "_ckpt"))
-            .trigger(availableNow=True)
-        )
-        return writer.start()
-
-    def store(self) -> DataFrame:
-        """The live vocabulary store: one row per distinct term with
-        its first-seen doc and total occurrence count."""
-        return (
-            self.spark.read.parquet(self._parts())
-            .groupBy("term")
-            .agg(
-                F.min("first_doc").cast("long").alias("first_doc"),
-                F.sum("n_occurrences").cast("long").alias("n_occurrences"),
-            )
-        )
 
 
-class IncrementalExportLedger:
+class IncrementalExportLedger(PartStore):
     """Streaming maintenance of the export WRITE-PATH ingest ledger
     (VERDICT r10 #6b — the streaming twin of the L310 conservation
     chain's front half): documents arrive as a stream, each
@@ -824,38 +752,19 @@ class IncrementalExportLedger:
     """
 
     SPLITS = ("train", "val", "test", "rejected")
-
-    def __init__(self, spark: SparkSession, root: str):
-        from marketing_attribution_etl_framework__maef_spark.llm.curation import split_assign
-        from marketing_attribution_etl_framework__maef_spark.llm.text import (
-            TOKEN_REGEX,
-            lang_cols,
-            normalize_text,
-            words,
-        )
-
-        self.spark = spark
-        self.root = root
-        self._split_assign = split_assign
-        self._token_regex = TOKEN_REGEX
-        self._lang_cols = lang_cols
-        self._normalize_text = normalize_text
-        self._words = words
-        os.makedirs(root, exist_ok=True)
-
-    def _parts(self) -> str:
-        return os.path.join(self.root, "ledger_parts")
+    KEY = ("split",)
+    MERGE = {"n_docs": F.sum, "n_tokens": F.sum}
 
     def _gated(self, docs: DataFrame) -> DataFrame:
         """Per-doc stateless export columns: (split, n_tokens) with
         split='rejected' for docs failing the quality+lang gate —
         verbatim the curate_corpus head expressions."""
         prof = docs.select(
-            "doc_id", self._normalize_text(F.col("text")).alias("_norm")
+            "doc_id", txt.normalize_text(F.col("text")).alias("_norm")
         ).select(
             "doc_id",
-            self._words(F.col("_norm")).alias("_ws"),
-            F.size(F.regexp_extract_all("_norm", F.lit(self._token_regex), 0))
+            txt.words(F.col("_norm")).alias("_ws"),
+            F.size(F.regexp_extract_all("_norm", F.lit(txt.TOKEN_REGEX), 0))
             .cast("long")
             .alias("n_tokens"),
         )
@@ -865,46 +774,26 @@ class IncrementalExportLedger:
             "doc_id",
             "n_tokens",
             ((n_words >= 5) & (n_distinct * 10 >= n_words * 3)).alias("_q"),
-            *self._lang_cols(F.array_distinct(F.col("_ws"))),
+            *txt.lang_cols(F.array_distinct(F.col("_ws"))),
         )
         gate = F.col("_q") & (F.col("lang_guess") == "en")
         return base.select(
-            F.when(gate, self._split_assign(F.col("doc_id")))
+            F.when(gate, split_assign(F.col("doc_id")))
             .otherwise(F.lit("rejected"))
             .alias("split"),
             "n_tokens",
         )
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        part = self._gated(batch_df).groupBy("split").agg(
+    def part(self, batch_df: DataFrame) -> DataFrame:
+        return self._gated(batch_df).groupBy("split").agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_tokens").cast("long").alias("n_tokens"),
         )
-        part.write.mode("overwrite").parquet(
-            os.path.join(self._parts(), f"batch_id={int(batch_id)}")
-        )
 
-    def start(self, docs: DataFrame, checkpoint: str | None = None):
-        writer = (
-            docs.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint or os.path.join(self.root, "_ckpt"))
-            .trigger(availableNow=True)
-        )
-        return writer.start()
-
-    def ledger(self) -> DataFrame:
-        """The live ledger: one row per split with total docs/tokens."""
-        return (
-            self.spark.read.parquet(self._parts())
-            .groupBy("split")
-            .agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("n_tokens").cast("long").alias("n_tokens"),
-            )
-        )
+    ledger = PartStore.store
 
 
-class IncrementalRepeatGate:
+class IncrementalRepeatGate(PartStore):
     """Streaming within-doc repeat gate (the L332 screen at ingest) —
     the one span-family member that streams legitimately: the repeat
     test is DOC-LOCAL, so each micro-batch flags its own documents
@@ -918,24 +807,13 @@ class IncrementalRepeatGate:
     state and stays with the staged store — this class documents the
     boundary by construction."""
 
-    def __init__(self, spark: SparkSession, root: str):
-        from marketing_attribution_etl_framework__maef_spark.llm.dedup import shingle_hash
-        from marketing_attribution_etl_framework__maef_spark.llm.text import (
-            normalize_text,
-            word_shingles,
-            words,
-        )
-
-        self.spark = spark
-        self.root = root
-        self._shingle_hash = shingle_hash
-        self._word_shingles = word_shingles
-        self._normalize_text = normalize_text
-        self._words = words
-        os.makedirs(root, exist_ok=True)
-
-    def _parts(self) -> str:
-        return os.path.join(self.root, "repeat_parts")
+    KEY = ("source",)
+    MERGE = {"n_docs": F.sum, "n_flagged": F.sum, "rep_instances": F.sum}
+    # the expression set _gate builds from, shared with its batch twins
+    _shingle_hash = staticmethod(dd.shingle_hash)
+    _word_shingles = staticmethod(txt.word_shingles)
+    _normalize_text = staticmethod(txt.normalize_text)
+    _words = staticmethod(txt.words)
 
     def _gate(self, docs: DataFrame, k: int = 8) -> DataFrame:
         """Per-source (n_docs, n_flagged, rep_instances) over one
@@ -982,33 +860,13 @@ class IncrementalRepeatGate:
             F.sum("_rep_inst").cast("long").alias("rep_instances"),
         )
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._gate(batch_df).write.mode("overwrite").parquet(
-            os.path.join(self._parts(), f"batch_id={int(batch_id)}")
-        )
+    def part(self, batch_df: DataFrame) -> DataFrame:
+        return self._gate(batch_df)
 
-    def start(self, docs: DataFrame, checkpoint: str | None = None):
-        writer = (
-            docs.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint or os.path.join(self.root, "_ckpt"))
-            .trigger(availableNow=True)
-        )
-        return writer.start()
-
-    def gate(self) -> DataFrame:
-        """The live gate counters: one row per source."""
-        return (
-            self.spark.read.parquet(self._parts())
-            .groupBy("source")
-            .agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("n_flagged").cast("long").alias("n_flagged"),
-                F.sum("rep_instances").cast("long").alias("rep_instances"),
-            )
-        )
+    gate = PartStore.store
 
 
-class IncrementalContaminationGate:
+class IncrementalContaminationGate(PartStore):
     """Streaming benchmark-contamination gate — the L316 audit run at
     ingest.  The contamination test is a join of each arriving train
     document's word 5-shingles against a STATIC eval-set shingle
@@ -1029,38 +887,29 @@ class IncrementalContaminationGate:
     it), and each micro-batch's cost is its own shingle explode — the
     pass over a streaming training corpus stays shuffle-free."""
 
-    def __init__(self, spark: SparkSession, root: str, eval_docs: DataFrame):
-        from marketing_attribution_etl_framework__maef_spark.llm.dedup import shingle_hash
-        from marketing_attribution_etl_framework__maef_spark.llm.text import (
-            normalize_text,
-            word_shingles,
-            words,
-        )
+    KEY = ("source",)
+    MERGE = {"n_train": F.sum, "n_contaminated": F.sum, "shared_shingles": F.sum}
 
-        self.spark = spark
-        self.root = root
-        self._shingle_hash = shingle_hash
-        self._word_shingles = word_shingles
-        self._normalize_text = normalize_text
-        self._words = words
+    def __init__(self, spark: SparkSession, root: str, eval_docs: DataFrame):
+        super().__init__(spark, root)
         # benchmark-sized: pin the distinct eval SHINGLE INDEX once —
         # the r11 optimization: pinning only the raw eval rows (as the
         # first version did) re-ran the eval-side shingle explode +
         # distinct on EVERY micro-batch; the index is what the join
         # actually needs, and it is what a production deployment would
         # broadcast once per benchmark release.
-        sh = F.array_distinct(
-            F.transform(word_shingles(words(normalize_text(F.col("text"))), 5), shingle_hash)
-        )
         self.eval_index = (
-            eval_docs.select(F.explode(sh).alias("_h"))
+            eval_docs.select(F.explode(self._shingles()).alias("_h"))
             .distinct()
             .localCheckpoint(eager=True)
         )
-        os.makedirs(root, exist_ok=True)
 
-    def _parts(self) -> str:
-        return os.path.join(self.root, "contamination_parts")
+    @staticmethod
+    def _shingles():
+        """Distinct hashed word 5-shingles of ``text``."""
+        return F.array_distinct(
+            F.transform(txt.word_shingles(txt.words(txt.normalize_text(F.col("text"))), 5), dd.shingle_hash)
+        )
 
     def _gate(self, train_docs: DataFrame) -> DataFrame:
         """Per-source (n_train, n_contaminated, shared_shingles) over
@@ -1082,12 +931,8 @@ class IncrementalContaminationGate:
         doc_id rows in one batch, the (doc_id, source) hit groupBy
         would count the doc once while n_train counts rows; dedupe
         upstream before feeding such a stream."""
-        norm = self._normalize_text(F.col("text"))
-        sh = F.array_distinct(
-            F.transform(self._word_shingles(self._words(norm), 5), self._shingle_hash)
-        )
         tr = train_docs.select(
-            "doc_id", "source", F.explode(sh).alias("_h")
+            "doc_id", "source", F.explode(self._shingles()).alias("_h")
         )
         # both sides pre-distinct => COUNT == distinct shared shingles
         hits = (
@@ -1109,33 +954,14 @@ class IncrementalContaminationGate:
             F.coalesce(F.col("shared_shingles"), F.lit(0)).cast("long").alias("shared_shingles"),
         )
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._gate(batch_df).write.mode("overwrite").parquet(
-            os.path.join(self._parts(), f"batch_id={int(batch_id)}")
-        )
-
-    def start(self, train_docs: DataFrame, checkpoint: str | None = None):
-        writer = (
-            train_docs.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint or os.path.join(self.root, "_ckpt"))
-            .trigger(availableNow=True)
-        )
-        return writer.start()
+    def part(self, batch_df: DataFrame) -> DataFrame:
+        return self._gate(batch_df)
 
     def gate(self) -> DataFrame:
         """The live gate counters: one row per source, with the q20
         contamination rate derived on the aggregated sums (identical
         algebra to the batch aggregate — (2*c*2^20 + n) div (2*n))."""
-        agg = (
-            self.spark.read.parquet(self._parts())
-            .groupBy("source")
-            .agg(
-                F.sum("n_train").cast("long").alias("n_train"),
-                F.sum("n_contaminated").cast("long").alias("n_contaminated"),
-                F.sum("shared_shingles").cast("long").alias("shared_shingles"),
-            )
-        )
-        return agg.select(
+        return self.store().select(
             "source",
             "n_train",
             "n_contaminated",

@@ -48,9 +48,10 @@ from pyspark.sql import functions as F
 
 from marketing_attribution_etl_framework__maef_spark.llm import dedup as dd
 from marketing_attribution_etl_framework__maef_spark.llm.text import normalize_text, word_shingles, words
+from marketing_attribution_etl_framework__maef_spark.streaming.incremental import StreamDriver
 
 
-class IncrementalNearDedup:
+class IncrementalNearDedup(StreamDriver):
     """foreachBatch driver: micro-batch of documents -> within-batch
     dedup -> reject near-dups of stored survivors -> append accepted
     docs + their LSH index to the store."""
@@ -69,17 +70,12 @@ class IncrementalNearDedup:
         jaccard_num: int = 1,
         jaccard_den: int = 2,
     ):
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root)
         self.text_col = text_col
         self.id_col = id_col
         self.k = k
         self.jaccard_num = jaccard_num
         self.jaccard_den = jaccard_den
-        os.makedirs(root, exist_ok=True)
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self.root, name)
 
     def _read_store(self, name: str, schema: str, exclude_batch: int) -> DataFrame:
         """Accepted state from all batches BEFORE ``exclude_batch`` —
@@ -162,14 +158,6 @@ class IncrementalNearDedup:
         acc_ids = accepted.select(id_col)
         self._write_batch(bands.join(acc_ids, id_col), self.BANDS, batch_id)
         self._write_batch(sets.join(acc_ids, id_col), self.SETS, batch_id)
-
-    def start(self, docs: DataFrame, checkpoint: str | None = None):
-        writer = (
-            docs.writeStream.foreachBatch(self.process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint or self._path("_checkpoint"))
-        )
-        return writer.start()
 
     def survivors(self) -> DataFrame:
         return self.spark.read.parquet(self._path(self.SURVIVORS)).drop("_batch_id")

@@ -68,7 +68,7 @@ from marketing_attribution_etl_framework__maef_spark.operators import segmentati
 from marketing_attribution_etl_framework__maef_spark.operators import survival as surv
 from marketing_attribution_etl_framework__maef_spark.plans.pipeline import AttributionPipeline, PipelineConfig
 from marketing_attribution_etl_framework__maef_spark.sources import bucketed as bkt
-from marketing_attribution_etl_framework__maef_spark.session import scratch_dir, transient_scratch_dir
+from marketing_attribution_etl_framework__maef_spark.session import transient_scratch_dir
 from marketing_attribution_etl_framework__maef_spark.stores import staged
 
 LOOKBACK_DAYS = 30
@@ -126,12 +126,25 @@ def _journeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     (CLAUDE.md perf rules): an expensive multi-consumer lineage beats
     AQE recompute when checkpointed once.  At production scale this
     is the staged journeys table every downstream model reads."""
-    return jny.build_journeys(
-        domain.conversions(spark, sf_dir),
-        domain.session_sources(spark, sf_dir),
-        strict_before=False,
-        lookback_days=LOOKBACK_DAYS,
-    ).localCheckpoint()
+    return AttributionPipeline(spark, sf_dir).journeys().localCheckpoint()
+
+
+def _linear_report(spark: SparkSession, sf_dir: str, report_mode: str = "corrected") -> DataFrame:
+    """The channel report over linear attribution of the staged
+    journeys, wired by ``AttributionPipeline.report``."""
+    pipe = AttributionPipeline(spark, sf_dir, PipelineConfig(model="linear", report_mode=report_mode))
+    return pipe.report(attr.attribute_linear(_journeys(spark, sf_dir)))
+
+
+def _query_scratch(spark: SparkSession, sf_dir: str, *parts: str):
+    """``transient_scratch_dir(*parts, applicationId, sf)``: the one
+    place a query writes files.  Keyed by application id so two
+    sessions at one sf never share (or rmtree) each other's root; the
+    query localCheckpoints its result inside the block, because the
+    root is gone once the block exits."""
+    return transient_scratch_dir(
+        *parts, spark.sparkContext.applicationId, os.path.basename(os.path.normpath(sf_dir))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -182,14 +195,7 @@ def q_attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_channel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2-J6 + A1 + P9-P11 + W1 over linear attribution, corrected
     grain (SURVEY §2.8.2)."""
-    journeys = _journeys(spark, sf_dir)
-    rep = rpt.channel_report(
-        attr.attribute_linear(journeys),
-        domain.session_sources(spark, sf_dir),
-        domain.session_costs(spark, sf_dir),
-        domain.conversions(spark, sf_dir),
-        mode="corrected",
-    )
+    rep = _linear_report(spark, sf_dir)
     return rep.select(
         "channel_name",
         "date",
@@ -201,14 +207,7 @@ def q_channel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_channel_report_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P11: cpo / roas derived metrics with zero-guards."""
-    journeys = _journeys(spark, sf_dir)
-    rep = rpt.channel_report(
-        attr.attribute_linear(journeys),
-        domain.session_sources(spark, sf_dir),
-        domain.session_costs(spark, sf_dir),
-        domain.conversions(spark, sf_dir),
-        mode="corrected",
-    )
+    rep = _linear_report(spark, sf_dir)
     out = rpt.export_report(rep)
     return out.select(
         "channel_name",
@@ -273,14 +272,7 @@ def q_channel_report_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8.2 replicate grain: the shipped fan-out arithmetic
     (src/etl/reporting.py:57-98), computed via the exact factorization
     (no M x N pair materialization)."""
-    journeys = _journeys(spark, sf_dir)
-    rep = rpt.channel_report(
-        attr.attribute_linear(journeys),
-        domain.session_sources(spark, sf_dir),
-        domain.session_costs(spark, sf_dir),
-        domain.conversions(spark, sf_dir),
-        mode="replicate",
-    )
+    rep = _linear_report(spark, sf_dir, report_mode="replicate")
     return rep.select(
         "channel_name",
         "date",
@@ -310,14 +302,7 @@ def q_chunk_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_report_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 + A4 + A5: cardinality summary, MIN scalar, global SUM."""
-    journeys = _journeys(spark, sf_dir)
-    rep = rpt.channel_report(
-        attr.attribute_linear(journeys),
-        domain.session_sources(spark, sf_dir),
-        domain.session_costs(spark, sf_dir),
-        domain.conversions(spark, sf_dir),
-        mode="corrected",
-    )
+    rep = _linear_report(spark, sf_dir)
     return rep.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("channel_name").alias("n_channels"),
@@ -590,12 +575,9 @@ def _run_stream_store(
 ) -> DataFrame:
     """Run the foreachBatch driver ``make(root)`` over ``stream`` to
     completion and return ``serve(driver)`` localCheckpoint'd.  The
-    root is a fresh scratch dir keyed by application id and sf (ADVICE
-    r09: two sessions on one host must never share one) and is removed
-    before returning, so no stream state outlives its query."""
-    with transient_scratch_dir(
-        ".stream", name, spark.sparkContext.applicationId, os.path.basename(os.path.normpath(sf_dir))
-    ) as root:
+    root is a ``_query_scratch`` dir, removed before returning, so no
+    stream state outlives its query."""
+    with _query_scratch(spark, sf_dir, ".stream", name) as root:
         drv = make(root)
         drv.start(stream).awaitTermination()
         return serve(drv).localCheckpoint()
@@ -694,50 +676,49 @@ def q_warehouse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_json_single,
     )
 
-    root = scratch_dir(".wh_tmp", os.path.basename(os.path.normpath(sf_dir)))
+    with _query_scratch(spark, sf_dir, ".wh_tmp") as root:
+        costs = domain.session_costs(spark, sf_dir)
+        wh_a = Warehouse(spark, os.path.join(root, "a"))
+        wh_b = Warehouse(spark, os.path.join(root, "b"))
+        wh_a.write("session_costs", costs)            # S9 insert / S11 truncate+reload
+        wh_b.copy_from(wh_a, ["session_costs"])       # S3 table copy
+        wh_b.verify_copy(wh_a, ["session_costs"])     # S4/A2 row-count verify (raises on mismatch)
 
-    costs = domain.session_costs(spark, sf_dir)
-    wh_a = Warehouse(spark, os.path.join(root, "a"))
-    wh_b = Warehouse(spark, os.path.join(root, "b"))
-    wh_a.write("session_costs", costs)            # S9 insert / S11 truncate+reload
-    wh_b.copy_from(wh_a, ["session_costs"])       # S3 table copy
-    wh_b.verify_copy(wh_a, ["session_costs"])     # S4/A2 row-count verify (raises on mismatch)
+        csv_path = os.path.join(root, "costs.csv")
+        json_path = os.path.join(root, "costs.json")
+        write_csv_single(costs, csv_path)             # S7
+        write_json_single(costs, json_path)           # S5
 
-    csv_path = os.path.join(root, "costs.csv")
-    json_path = os.path.join(root, "costs.json")
-    write_csv_single(costs, csv_path)             # S7
-    write_json_single(costs, json_path)           # S5
+        entries = jny.journey_entries(_journeys(spark, sf_dir))
+        entries_path = os.path.join(root, "entries.json")
+        write_json_single(entries, entries_path)      # S5 on the contract shape
+        entries_back = read_journey_entries(spark, entries_path)  # S6
 
-    entries = jny.journey_entries(_journeys(spark, sf_dir))
-    entries_path = os.path.join(root, "entries.json")
-    write_json_single(entries, entries_path)      # S5 on the contract shape
-    entries_back = read_journey_entries(spark, entries_path)  # S6
-
-    cost_schema = "session_id string, cost double"
-    surfaces = [
-        ("parquet", wh_b.read("session_costs")),
-        ("csv", spark.read.schema(cost_schema).option("header", True).csv(csv_path)),
-        ("json", spark.read.schema(cost_schema).json(json_path)),
-    ]
-    # metric is exact integer milli-units (cost = round(value*0.1, 6)
-    # has 3-decimal granularity): double sums are order-sensitive and
-    # ROUND ties flip cross-engine at scale (ADVICE r02 / float rule)
-    summaries = [
-        df.agg(
+        cost_schema = "session_id string, cost double"
+        surfaces = [
+            ("parquet", wh_b.read("session_costs")),
+            ("csv", spark.read.schema(cost_schema).option("header", True).csv(csv_path)),
+            ("json", spark.read.schema(cost_schema).json(json_path)),
+        ]
+        # metric is exact integer milli-units (cost = round(value*0.1, 6)
+        # has 3-decimal granularity): double sums are order-sensitive and
+        # ROUND ties flip cross-engine at scale (ADVICE r02 / float rule)
+        summaries = [
+            df.agg(
+                F.count(F.lit(1)).cast("long").alias("n_rows"),
+                F.sum(F.round(F.col("cost") * 1000, 0).cast("long")).alias("metric"),
+            ).select(F.lit(fmt).alias("fmt"), "n_rows", "metric")
+            for fmt, df in surfaces
+        ]
+        entries_summary = entries_back.agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(F.round(F.col("cost") * 1000, 0).cast("long")).alias("metric"),
-        ).select(F.lit(fmt).alias("fmt"), "n_rows", "metric")
-        for fmt, df in surfaces
-    ]
-    entries_summary = entries_back.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("conversion").cast("long").alias("metric"),
-    ).select(F.lit("journey_json").alias("fmt"), "n_rows", "metric")
+            F.sum("conversion").cast("long").alias("metric"),
+        ).select(F.lit("journey_json").alias("fmt"), "n_rows", "metric")
 
-    out = summaries[0]
-    for s in summaries[1:] + [entries_summary]:
-        out = out.unionByName(s)
-    return out
+        out = summaries[0]
+        for s in summaries[1:] + [entries_summary]:
+            out = out.unionByName(s)
+        return out.localCheckpoint()
 
 
 def q_session_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3173,22 +3154,22 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     value corruption in the ORC path hash-mismatches."""
     from marketing_attribution_etl_framework__maef_spark.sources.io import write_orc_single
 
-    root = scratch_dir(".orc_tmp", os.path.basename(os.path.normpath(sf_dir)))
-    costs = domain.session_costs(spark, sf_dir)
-    orc_path = os.path.join(root, "costs.orc")
-    write_orc_single(costs, orc_path)
-    surfaces = [
-        ("orc", spark.read.orc(orc_path)),
-        ("parquet_direct", costs),
-    ]
-    out = None
-    for fmt, df in surfaces:
-        s = df.agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(F.round(F.col("cost") * 1000, 0).cast("long")).alias("metric"),
-        ).select(F.lit(fmt).alias("fmt"), "n_rows", "metric")
-        out = s if out is None else out.unionByName(s)
-    return out
+    with _query_scratch(spark, sf_dir, ".orc_tmp") as root:
+        costs = domain.session_costs(spark, sf_dir)
+        orc_path = os.path.join(root, "costs.orc")
+        write_orc_single(costs, orc_path)
+        surfaces = [
+            ("orc", spark.read.orc(orc_path)),
+            ("parquet_direct", costs),
+        ]
+        out = None
+        for fmt, df in surfaces:
+            s = df.agg(
+                F.count(F.lit(1)).cast("long").alias("n_rows"),
+                F.sum(F.round(F.col("cost") * 1000, 0).cast("long")).alias("metric"),
+            ).select(F.lit(fmt).alias("fmt"), "n_rows", "metric")
+            out = s if out is None else out.unionByName(s)
+        return out.localCheckpoint()
 
 
 def q_rel_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3954,7 +3935,8 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Airflow stages (dags/ihc_api_dag.py:257-307 — setup_database >>
     transform_data >> send_data_to_api >> load_attribution_results >>
     create_channel_report) as ONE chain against a scratch warehouse,
-    with every §5 runtime check asserted in-line:
+    with every §5 runtime check asserted in-line through the
+    ``AttributionPipeline`` gates:
 
     - setup (S2): ``Warehouse.create_initial_schema`` declares the five
       tables (db_utils.py:42-65);
@@ -3964,9 +3946,9 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
       for the API hop);
     - load: ``merge_upsert`` into attribution_customer_journey, then the
       loaded-row-count parity check (db_utils.py:86-102) and
-      sum(ihc) > 0 (load.py:120-123) — and the REPORT BELOW CONSUMES THE
-      LOADED PARQUET, not the in-session lineage, so the load stage is
-      inside the verified chain;
+      sum(ihc) > 0 (load.py:120-123) in one agg — and the REPORT BELOW
+      CONSUMES THE LOADED PARQUET, not the in-session lineage, so the
+      load stage is inside the verified chain;
     - report: channel_report + export, non-empty (reporting.py:104-106).
 
     Output is the export contract, so the existing report-export oracle
@@ -3975,74 +3957,50 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary is a parquet table exactly as here (the merge_upsert path
     is partition-pruned dynamic overwrite); the in-line checks are one
     cheap agg per boundary."""
-    from marketing_attribution_etl_framework__maef_spark.plans.pipeline import AttributionPipeline, PipelineConfig
-    from marketing_attribution_etl_framework__maef_spark.sources.io import Warehouse, merge_upsert
-
-    root = scratch_dir(".wh_e2e", os.path.basename(os.path.normpath(sf_dir)))
-
     from concurrent.futures import ThreadPoolExecutor
 
-    pipe = AttributionPipeline(
-        spark, sf_dir, PipelineConfig(model="linear", report_mode="corrected")
-    )
-    # stage 2 precondition: transform (non-empty check,
-    # transform.py:264-265).  The transform output comes from the staged
-    # journeys table (_journeys cache) — identical lineage to
-    # pipe.journeys(); a production DAG likewise stages the transform
-    # ONCE and every downstream stage reads the staging table
-    # (pipeline.py sequencing is pinned separately by
-    # tests/test_functions_and_io.py run_with_checks tests + the
-    # goldens).
+    from marketing_attribution_etl_framework__maef_spark.sources.io import Warehouse, merge_upsert
+
+    pipe = AttributionPipeline(spark, sf_dir, PipelineConfig(model="linear"))
+    # The transform output comes from the staged journeys table
+    # (_journeys, the same lineage as pipe.journeys()); a production DAG
+    # likewise stages the transform ONCE and every downstream stage
+    # reads the staging table.
     journeys = _journeys(spark, sf_dir)
-    wh = Warehouse(spark, root)
-    # r12 (VERDICT r11 #1, guide §2.6): stage 1 (schema DDL — empty-table
-    # sink writes) is independent of stages 2-3, so it runs on a driver
-    # thread while the main thread checks the transform and materializes
-    # the attribution; an Airflow DAG would likewise run setup_database
-    # in parallel with transform's staging read.
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _f_schema = _pool.submit(wh.create_initial_schema)
-        if journeys.limit(1).count() == 0:
-            raise ValueError("transform produced no journey entries")
-        # stage 3: attribute (native §2.6 linear)
-        # localCheckpoint: the attribution feeds three consumers (the
-        # dup-guard inside merge_upsert, the merge itself, and the count
-        # parity check) — recomputing the window per consumer tripled the
-        # stage (the expensive-multi-consumer checkpoint rule).
-        att = (
-            attr.attribute(journeys, "linear")
-            .select("conv_id", "session_id", "ihc")
-            .localCheckpoint()
-        )
-        _f_schema.result()
-    # stage 4: load + verify (db_utils.py:86-102, load.py:120-123); the
-    # parity count over the checkpointed attribution overlaps the merge
-    # sink write (independent jobs — guide §2.6)
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _f_n = _pool.submit(att.count)
-        merge_upsert(wh, "attribution_customer_journey", att, ["conv_id", "session_id"])
-        loaded = wh.read("attribution_customer_journey")
-        checks = loaded.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("ihc").alias("total_ihc")
-        ).first()
-        att_n = _f_n.result()
-    if checks["n"] != att_n:
-        raise ValueError(f"load verification failed: {checks['n']} loaded")
-    if (checks["total_ihc"] or 0.0) <= 0:
-        raise ValueError("total ihc <= 0 after load")
-    # stage 5: report over the LOADED attribution table
-    rep = rpt.channel_report(
-        loaded,
-        pipe.sessions(),
-        domain.session_costs(spark, sf_dir),
-        pipe.conversions(),
-        mode="corrected",
-    )
-    # the export feeds two consumers (the non-empty check and the
-    # caller's collect) — checkpoint once (expensive-multi-consumer rule)
-    out = rpt.export_report(rep).localCheckpoint()
-    if out.limit(1).count() == 0:
-        raise ValueError("channel report is empty")
+    with _query_scratch(spark, sf_dir, ".wh_e2e") as root:
+        wh = Warehouse(spark, root)
+        # r12 (VERDICT r11 #1, guide §2.6): stage 1 (schema DDL — empty-table
+        # sink writes) is independent of stages 2-3, so it runs on a driver
+        # thread while the main thread checks the transform and materializes
+        # the attribution; an Airflow DAG would likewise run setup_database
+        # in parallel with transform's staging read.
+        with ThreadPoolExecutor(max_workers=1) as _pool:
+            _f_schema = _pool.submit(wh.create_initial_schema)
+            pipe.check_journeys(journeys)
+            # stage 3: attribute (native §2.6 linear)
+            # localCheckpoint: the attribution feeds three consumers (the
+            # dup-guard inside merge_upsert, the merge itself, and the count
+            # parity check) — recomputing the window per consumer tripled the
+            # stage (the expensive-multi-consumer checkpoint rule).
+            att = (
+                attr.attribute(journeys, "linear")
+                .select("conv_id", "session_id", "ihc")
+                .localCheckpoint()
+            )
+            _f_schema.result()
+        # stage 4: load + verify; the parity count over the checkpointed
+        # attribution overlaps the merge sink write (independent jobs —
+        # guide §2.6)
+        with ThreadPoolExecutor(max_workers=1) as _pool:
+            _f_n = _pool.submit(att.count)
+            merge_upsert(wh, "attribution_customer_journey", att, ["conv_id", "session_id"])
+            loaded = wh.read("attribution_customer_journey")
+            pipe.check_total_ihc(loaded, expect_rows=_f_n.result())
+        # stage 5: report over the LOADED attribution table; the export
+        # feeds two consumers (the non-empty check and the caller's
+        # collect) and must outlive the root — checkpoint once
+        out = rpt.export_report(pipe.report(loaded)).localCheckpoint()
+    pipe.check_report(out)
     return out.select(
         "channel_name",
         "date",
@@ -4903,26 +4861,26 @@ def q_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted per day, so a pruning bug that drops or duplicates rows —
     or a writer bug that misroutes rows across partitions —
     hash-mismatches against the straight-from-source oracle."""
-    root = scratch_dir(".part_tmp", os.path.basename(os.path.normpath(sf_dir)))
-    ev = domain.events(spark, sf_dir).filter(F.col("event_type") != "purchase")
-    ev.select("event_id", "ts", "user_id", "value", "event_type").write.partitionBy(
-        "event_type"
-    ).mode("overwrite").parquet(root)
-    surfaces = [
-        ("partition_dir", spark.read.parquet(os.path.join(root, "event_type=click"))),
-        (
-            "pruned_filter",
-            spark.read.parquet(root).filter(F.col("event_type") == "click").drop("event_type"),
-        ),
-    ]
-    out = None
-    for fmt, df in surfaces:
-        s = df.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("event_day")).agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("long")).cast("long").alias("cents"),
-        ).select(F.lit(fmt).alias("surface"), "event_day", "n_rows", "cents")
-        out = s if out is None else out.unionByName(s)
-    return out
+    with _query_scratch(spark, sf_dir, ".part_tmp") as root:
+        ev = domain.events(spark, sf_dir).filter(F.col("event_type") != "purchase")
+        ev.select("event_id", "ts", "user_id", "value", "event_type").write.partitionBy(
+            "event_type"
+        ).mode("overwrite").parquet(root)
+        surfaces = [
+            ("partition_dir", spark.read.parquet(os.path.join(root, "event_type=click"))),
+            (
+                "pruned_filter",
+                spark.read.parquet(root).filter(F.col("event_type") == "click").drop("event_type"),
+            ),
+        ]
+        out = None
+        for fmt, df in surfaces:
+            s = df.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("event_day")).agg(
+                F.count(F.lit(1)).cast("long").alias("n_rows"),
+                F.sum(F.round(F.col("value") * 100, 0).cast("long")).cast("long").alias("cents"),
+            ).select(F.lit(fmt).alias("surface"), "event_day", "n_rows", "cents")
+            out = s if out is None else out.unionByName(s)
+        return out.localCheckpoint()
 
 
 def q_ivt_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6243,21 +6201,20 @@ def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_table,
     )
 
-    root = scratch_dir(".compact_tmp", os.path.basename(os.path.normpath(sf_dir)))
-    wh = Warehouse(spark, root)
-    costs = domain.session_costs(spark, sf_dir)
-    costs.repartition(16).write.mode("overwrite").parquet(wh.path("session_costs"))
-
     def summary(df: DataFrame, phase: str) -> DataFrame:
         return df.agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.sum(F.round(F.col("cost") * 1000, 0).cast("long")).alias("metric"),
         ).select(F.lit(phase).alias("phase"), "n_rows", "metric")
 
-    pre = summary(spark.read.parquet(wh.path("session_costs")), "fragmented").localCheckpoint()
-    compact_table(wh, "session_costs")
-    post = summary(spark.read.parquet(wh.path("session_costs")), "compacted")
-    return pre.unionByName(post)
+    with _query_scratch(spark, sf_dir, ".compact_tmp") as root:
+        wh = Warehouse(spark, root)
+        costs = domain.session_costs(spark, sf_dir)
+        costs.repartition(16).write.mode("overwrite").parquet(wh.path("session_costs"))
+        pre = summary(spark.read.parquet(wh.path("session_costs")), "fragmented").localCheckpoint()
+        compact_table(wh, "session_costs")
+        post = summary(spark.read.parquet(wh.path("session_costs")), "compacted")
+        return pre.unionByName(post).localCheckpoint()
 
 
 def q_attribution_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6465,16 +6422,7 @@ def q_stream_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("zz_flush").alias("event_type"),
         )
     )
-    # scratch keyed by applicationId + sf (ADVICE r09: a fixed shared
-    # path rmtree'd on entry would let two concurrent sessions on one
-    # host clobber each other's source parquet mid-stream — same key
-    # discipline as the journeys/kmeans caches); removed once the
-    # sink's result is localCheckpoint'd
-    with transient_scratch_dir(
-        ".sessionize_state",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.normpath(sf_dir)),
-    ) as root:
+    with _query_scratch(spark, sf_dir, ".sessionize_state") as root:
         src = os.path.join(root, "src")
         # ONE file -> availableNow processes everything in one micro-batch,
         # so every sentinel sorts after its user's real events inside the

@@ -32,7 +32,6 @@ from __future__ import annotations
 import gc
 import json
 import os
-import shutil
 import sys
 import time
 
@@ -40,7 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from marketing_attribution_etl_framework__maef_spark import stores
-from marketing_attribution_etl_framework__maef_spark.session import get_spark, scratch_dir
+from marketing_attribution_etl_framework__maef_spark.session import get_spark, transient_scratch_dir
 
 GC_EVERY = 6  # timed queries between forced driver GCs
 
@@ -328,13 +327,12 @@ def main() -> None:
     # only; no timing methodology changes.
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as _inc
 
-    _warm_src = scratch_dir(".bench_stream_warm", spark.sparkContext.applicationId)
-    spark.range(1).selectExpr("id AS user_id").write.mode("overwrite").parquet(_warm_src)
-    _inc.run_to_memory(
-        spark.readStream.schema("user_id long").parquet(_warm_src).groupBy("user_id").count(),
-        "bench_stream_warm",
-    )
-    shutil.rmtree(_warm_src, ignore_errors=True)
+    with transient_scratch_dir(".bench_stream_warm", spark.sparkContext.applicationId) as _warm_src:
+        spark.range(1).selectExpr("id AS user_id").write.mode("overwrite").parquet(_warm_src)
+        _inc.run_to_memory(
+            spark.readStream.schema("user_id long").parquet(_warm_src).groupBy("user_id").count(),
+            "bench_stream_warm",
+        )
 
     timings: dict[str, float] = {}
     for i, (name, fn) in enumerate(queries.items()):

@@ -122,9 +122,14 @@ def dedup_results(rows: DataFrame, deterministic: bool = True) -> DataFrame:
     return rows.groupBy("conv_id", "session_id").agg(F.max("ihc").alias("ihc"))
 
 
-def check_total_ihc(rows: DataFrame) -> float:
-    """A5 (``src/etl/load.py:120-123``): reject if sum(ihc) <= 0."""
-    total = rows.agg(F.sum("ihc").alias("t")).first()["t"] or 0.0
+def check_total_ihc(rows: DataFrame, expect_rows: int | None = None) -> float:
+    """A5 (``src/etl/load.py:120-123``): reject if sum(ihc) <= 0.  Given
+    ``expect_rows``, the same agg also checks the loaded row count
+    (``db_utils.py:86-102``), so a load verifies in one job."""
+    got = rows.agg(F.sum("ihc").alias("t"), F.count(F.lit(1)).alias("n")).first()
+    if expect_rows is not None and got["n"] != expect_rows:
+        raise ValueError(f"load verification failed: {got['n']} loaded, {expect_rows} expected")
+    total = got["t"] or 0.0
     if total <= 0:
         raise ValueError(f"total ihc {total} <= 0 — refusing to load")
     return float(total)

@@ -221,15 +221,6 @@ def export_report(report: DataFrame) -> DataFrame:
     )
 
 
-def report_summary(report: DataFrame) -> DataFrame:
-    """A3 (``src/etl/reporting.py:124-130``): cardinality summary."""
-    return report.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("channel_name").alias("n_channels"),
-        F.countDistinct("date").alias("n_dates"),
-    )
-
-
 def dormant_users(ev: DataFrame, cutoff: str) -> DataFrame:
     """Churn-risk audience: users with session activity on/after
     ``cutoff`` but no purchase on/after it, rolled up by their

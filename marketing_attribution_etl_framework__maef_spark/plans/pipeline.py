@@ -7,9 +7,12 @@ lazy DataFrame lineage inside a single SparkSession — process hops and
 XCom/file handoffs disappear; node boundaries remain only at shuffles
 (the J1 join, the attribution window, the report agg) and sinks.
 
-Runtime verification mirrors the reference's checks (SURVEY §5):
+This module is the one definition of the stage wiring and of the
+runtime gates, which mirror the reference's checks (SURVEY §5):
 non-empty transform (``transform.py:264-265``), sum(ihc) > 0
 (``load.py:120-123``), non-empty report (``reporting.py:104-106``).
+Registry queries that need the channel report or a gate call
+``AttributionPipeline``.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ from marketing_attribution_etl_framework__maef_spark import domain
 from marketing_attribution_etl_framework__maef_spark.functions.dates import date_range_predicate, validate_date_range
 from marketing_attribution_etl_framework__maef_spark.operators import attribution as attr
 from marketing_attribution_etl_framework__maef_spark.operators import journeys as jny
+from marketing_attribution_etl_framework__maef_spark.operators import loader as ldr
 from marketing_attribution_etl_framework__maef_spark.operators import reporting as rpt
 
 
@@ -79,9 +83,11 @@ class AttributionPipeline:
         return attr.attribute(self.journeys(), self.cfg.model)
 
     # -- stage 5: reporting -----------------------------------------------
-    def report(self) -> DataFrame:
+    def report(self, attribution: DataFrame) -> DataFrame:
+        """The channel report over ``attribution``: the one place the
+        report is wired to its session, cost and conversion inputs."""
         return rpt.channel_report(
-            self.attribution(),
+            attribution,
             self.sessions(),
             domain.session_costs(self.spark, self.sf_dir),
             self.conversions(),
@@ -89,7 +95,7 @@ class AttributionPipeline:
         )
 
     def export(self) -> DataFrame:
-        return rpt.export_report(self.report())
+        return rpt.export_report(self.report(self.attribution()))
 
     # -- staged execution with per-stage restartability --------------------
     STAGES = ("journeys", "attribution", "report")
@@ -111,8 +117,8 @@ class AttributionPipeline:
           merge_upsert; here the unit of retry is the whole stage,
           exactly like the reference's task).
 
-        Runtime checks are the same three as run_with_checks, applied
-        to the STAGED tables (a resume re-validates what it reads).
+        The three runtime gates are applied to the STAGED tables (a
+        resume re-validates what it reads).
         At 100 TB this is the shape you actually run: stage tables on
         object storage, orchestrated retries at stage granularity, no
         lineage longer than one stage — pinned by
@@ -131,47 +137,30 @@ class AttributionPipeline:
         if start <= 0:
             self.journeys().write.mode("overwrite").parquet(jpath)
         journeys = self.spark.read.parquet(jpath)
-        if journeys.limit(1).count() == 0:
-            raise ValueError("transform produced no journey entries")  # transform.py:264-265
+        self.check_journeys(journeys)
 
         if start <= 1:
             attr.attribute(journeys, self.cfg.model).write.mode("overwrite").parquet(apath)
         attribution = self.spark.read.parquet(apath)
-        total = attribution.agg(F.sum("ihc")).first()[0] or 0.0
-        if total <= 0:
-            raise ValueError("total ihc <= 0")  # load.py:120-123
+        self.check_total_ihc(attribution)
 
         if start <= 2:
-            report = rpt.channel_report(
-                attribution,
-                self.sessions(),
-                domain.session_costs(self.spark, self.sf_dir),
-                self.conversions(),
-                mode=self.cfg.report_mode,
-            )
-            rpt.export_report(report).write.mode("overwrite").parquet(rpath)
+            rpt.export_report(self.report(attribution)).write.mode("overwrite").parquet(rpath)
         out = self.spark.read.parquet(rpath)
-        if out.limit(1).count() == 0:
-            raise ValueError("channel report is empty")  # reporting.py:104-106
+        self.check_report(out)
         return out
 
-    # -- runtime verification (SURVEY §5) ----------------------------------
-    def run_with_checks(self) -> DataFrame:
-        journeys = self.journeys()
+    # -- runtime gates (SURVEY §5) -----------------------------------------
+    @staticmethod
+    def check_journeys(journeys: DataFrame) -> None:
+        """Non-empty transform (``transform.py:264-265``)."""
         if journeys.limit(1).count() == 0:
-            raise ValueError("transform produced no journey entries")  # transform.py:264-265
-        attribution = attr.attribute(journeys, self.cfg.model)
-        total = attribution.agg(F.sum("ihc")).first()[0] or 0.0
-        if total <= 0:
-            raise ValueError("total ihc <= 0")  # load.py:120-123
-        report = rpt.channel_report(
-            attribution,
-            self.sessions(),
-            domain.session_costs(self.spark, self.sf_dir),
-            self.conversions(),
-            mode=self.cfg.report_mode,
-        )
-        out = rpt.export_report(report)
-        if out.limit(1).count() == 0:
-            raise ValueError("channel report is empty")  # reporting.py:104-106
-        return out
+            raise ValueError("transform produced no journey entries")
+
+    check_total_ihc = staticmethod(ldr.check_total_ihc)  # sum(ihc) > 0, load.py:120-123
+
+    @staticmethod
+    def check_report(report: DataFrame) -> None:
+        """Non-empty report (``reporting.py:104-106``)."""
+        if report.limit(1).count() == 0:
+            raise ValueError("channel report is empty")

@@ -16,26 +16,20 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 
-def scratch_dir(*parts: str) -> str:
+@contextmanager
+def transient_scratch_dir(*parts: str) -> Iterator[str]:
     """A fresh, empty directory under the scratch root
-    ($SPARK_GRAFT_SCRATCH, default /tmp/maef_spark_scratch): whatever a
-    previous run left at ``root/parts...`` is removed first.  The root
+    ($SPARK_GRAFT_SCRATCH, default /tmp/maef_spark_scratch) for the
+    length of a ``with`` block.  Whatever a previous run left at
+    ``root/parts...`` is removed first.  On exit the directory is
+    removed, and so is each parent below the scratch root that it
+    leaves empty, so nothing the block wrote outlives it.  The root
     lives outside the repo tree so query side files never dirty it."""
     path = os.path.join(
         os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/maef_spark_scratch"), *parts
     )
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
-    return path
-
-
-@contextmanager
-def transient_scratch_dir(*parts: str) -> Iterator[str]:
-    """``scratch_dir(*parts)`` for the length of a ``with`` block.  On
-    exit the directory is removed, and so is each parent below the
-    scratch root that it leaves empty, so nothing the block wrote
-    outlives it."""
-    path = scratch_dir(*parts)
     try:
         yield path
     finally:

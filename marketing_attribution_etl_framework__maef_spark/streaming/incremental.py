@@ -107,11 +107,14 @@ def _file_stream(
     scan).  FileStreamSource requires a directory (or glob) source
     path: a bare file fails with "Option 'basePath' must be a
     directory", so the harness's single-file layout is rewritten as a
-    glob, which anchors basePath at the parent directory."""
-    if path.endswith(".parquet") and not os.path.isdir(path):
-        path = os.path.join(os.path.dirname(path), os.path.basename(path).replace(".parquet", "*.parquet"))
+    glob, which anchors basePath at the parent directory.  The schema is
+    peeked from the original path: a batch read of the glob probes a
+    ``<glob>/_spark_metadata`` that cannot exist and logs a
+    FileStreamSink FileNotFoundException stack trace."""
     if schema is None:
         schema = spark.read.parquet(path).schema
+    if path.endswith(".parquet") and not os.path.isdir(path):
+        path = os.path.join(os.path.dirname(path), os.path.basename(path).replace(".parquet", "*.parquet"))
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -190,13 +190,40 @@ def test_single_file_sinks(spark, tmp_path):
     assert body[0] == "k,v" and len(body) == 3
 
 
-def test_pipeline_end_to_end_with_checks(spark, sf_dir):
-    out = AttributionPipeline(spark, sf_dir, PipelineConfig(model="ihc")).run_with_checks()
+def test_pipeline_end_to_end_with_checks(spark, sf_dir, tmp_path):
+    out = AttributionPipeline(spark, sf_dir, PipelineConfig(model="ihc")).run_staged(str(tmp_path))
     rows = out.collect()
     assert len(rows) > 0
     assert out.columns == ["channel_name", "date", "cost", "ihc", "ihc_revenue", "cpo", "roas"]
     # report grain is PK(channel_name, date)
     assert len(rows) == len({(r.channel_name, r.date) for r in rows})
+
+
+def test_run_staged_gates_on_degenerate_input(spark, sf_dir, tmp_path):
+    """Each run_staged gate fires on the input it guards: no journeys,
+    sum(ihc) = 0, and an attribution that reports to no row."""
+    # a conversion range before the data starts: no journeys
+    past = AttributionPipeline(spark, sf_dir, PipelineConfig(start="2000-01-01", end="2000-01-31"))
+    with pytest.raises(ValueError, match="transform produced no journey entries"):
+        past.run_staged(str(tmp_path / "past"))
+
+    pipe = AttributionPipeline(spark, sf_dir)
+    sessions = [r.session_id for r in pipe.sessions().select("session_id").limit(3).collect()]
+
+    def resume_report_over(name, conv_ids, ihc):
+        wh = tmp_path / name
+        spark.range(1).write.parquet(str(wh / "journeys"))  # the journeys gate only needs a row
+        spark.createDataFrame(
+            [(c, s, ihc) for c, s in zip(conv_ids, sessions)],
+            "conv_id string, session_id string, ihc double",
+        ).write.parquet(str(wh / "attribution"))
+        pipe.run_staged(str(wh), resume_from="report")
+
+    real_convs = [r.conv_id for r in pipe.conversions().select("conv_id").limit(3).collect()]
+    with pytest.raises(ValueError, match="total ihc 0.0 <= 0"):
+        resume_report_over("zero_ihc", real_convs, 0.0)
+    with pytest.raises(ValueError, match="channel report is empty"):
+        resume_report_over("no_conv", ["no_such_conversion"] * 3, 1.0)
 
 
 def test_pipeline_date_range(spark, sf_dir):

@@ -93,11 +93,3 @@ def test_export_zero_guards(spark):
     assert got["A"].roas == pytest.approx(0.5)            # 5/10
     assert got["B"].roas == 0.0                           # cost=0 guard
     assert got["B"].cpo == pytest.approx(0.0 / 2.0)       # cost 0 / ihc 2
-
-
-def test_report_summary(spark, data):
-    attribution, sessions, costs, conversions = data
-    rep = rpt.channel_report(attribution, sessions, costs, conversions)
-    s = rpt.report_summary(rep).first()
-    assert s.n_rows == rep.count()
-    assert s.n_channels <= s.n_rows

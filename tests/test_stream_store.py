@@ -34,8 +34,9 @@ def test_start_dispatches_through_subclass_override(spark, tmp_path):
 
 
 def test_stream_query_leaves_no_state_behind(spark, sf_dir, tmp_path, monkeypatch):
-    """A stream store query writes nothing into the repo tree and
-    removes its scratch root before returning; the served frame is
+    """A query that writes files (a stream store, or a sink round-trip
+    under ``_query_scratch``) writes nothing into the repo tree and
+    removes its scratch root before returning; its result is
     localCheckpoint'd, so it stays readable without the root."""
     import __spark_entry__ as entry
 
@@ -47,3 +48,14 @@ def test_stream_query_leaves_no_state_behind(spark, sf_dir, tmp_path, monkeypatc
     # every event adds 1 to one cell in each of the sketch's d=4 rows
     n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     assert out.agg(F.sum("cnt")).collect()[0][0] == 4 * n_events
+
+    for q in (
+        entry.q_warehouse_roundtrip,
+        entry.q_orc_roundtrip,
+        entry.q_pipeline_e2e,
+        entry.q_partitioned_sink,
+        entry.q_compaction_roundtrip,
+    ):
+        rows = q(spark, sf_dir).collect()
+        assert rows, q.__name__
+        assert os.listdir(tmp_path) == [], q.__name__

@@ -92,4 +92,8 @@ if __name__ == "__main__":
     args = sys.argv[1:]
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
     names = [a for a in args if "/" not in a] or None
+    unknown = sorted(set(names or []).difference(entrymod.queries()))
+    if unknown:
+        print(f"crosscheck: unknown query name(s): {' '.join(unknown)}")
+        sys.exit(2)
     sys.exit(1 if compare(sf_dir, names) else 0)

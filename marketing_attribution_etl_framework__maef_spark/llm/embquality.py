@@ -204,27 +204,24 @@ def centroid_distance_outliers(
     cuts adapt per cluster (a tight cluster and a diffuse one both
     yield their own worst 10%), which is what a triage queue wants.
 
-    Scale: the centroid table is broadcast (bounded k); the only
-    data-scaled ops are one window partitioned by vec_id over k
-    candidate rows (the assignment) and one window partitioned by
-    cluster (the rank).  The per-cluster rank window shards on k
+    Scale: the centroid table is collected (bounded k); the
+    assignment is one kernel pass over the corpus and the only
+    data-scaled window is partitioned by cluster (the rank).  The
+    per-cluster rank window shards on k
     partitions — at 100 TB use the log-histogram cut instead of the
     exact rank for the decile; k here is the operator's contract.
 
     Output: (cluster, vec_id, cos_q20, rnk) — outlier rows only.
     """
     from marketing_attribution_etl_framework__maef_spark.llm.similarity import (
-        _pair_cos,
-        ivf_assign,
+        _assigned,
+        _vectors,
     )
 
-    assign = ivf_assign(embeddings, centroids)
-    cents = _norm_vec(centroids, "vec_id", "embedding", "centroid_id", "_c")
-    scored = (
-        assign.join(
-            F.broadcast(cents), assign["cluster"] == cents["centroid_id"]
-        )
-        .select("vec_id", "cluster", _pair_cos("_v", "_c").alias("_cs"))
+    # the assignment kernel also returns each vector's own-centroid
+    # cosine, so no second pass over the centroids is needed
+    scored = _assigned(
+        embeddings, _vectors(centroids, "vec_id", "embedding"), "vec_id", "embedding"
     )
     w = Window.partitionBy("cluster").orderBy(F.asc("_cs"), F.asc("vec_id"))
     n = Window.partitionBy("cluster")

@@ -4,30 +4,42 @@ Two paths, same interface:
 
 - ``brute_topk``: exact cosine top-k — one pass over the corpus per
   query batch. The query side is broadcast, the corpus side streams:
-  O(N * Q) dot products inside whole-stage codegen, no shuffle at all
-  until the per-query top-k window. This is the correctness baseline
-  and is perfectly fine when Q is small.
+  O(N * Q) left-fold dot products, no shuffle at all until the
+  per-query top-k window. This is the correctness baseline and is
+  perfectly fine when Q is small.
 - ``ivf_topk``: IVF-flat pruning — vectors are assigned to their
-  nearest centroid once (broadcast centroid table), queries probe only
-  the ``probe`` nearest clusters, so the scanned fraction is
-  ~probe/n_centroids of the corpus. Centroid choice is pluggable; the
-  default (first ``n_centroids`` vectors) is deterministic so results
-  are exactly reproducible in the SQL oracle. At 100 TB you'd feed
-  k-means centroids and partition the corpus by cluster id so probes
-  prune at the parquet-partition level (dynamic partition pruning).
+  nearest centroid once, queries probe only the ``probe`` nearest
+  clusters, so the scanned fraction is ~probe/n_centroids of the
+  corpus. Centroid choice is pluggable; the default (first
+  ``n_centroids`` vectors) is deterministic so results are exactly
+  reproducible in the SQL oracle. At 100 TB you'd feed k-means
+  centroids and partition the corpus by cluster id so probes prune at
+  the parquet-partition level (dynamic partition pruning).
 
-Dot products use ``zip_with`` + left-fold ``aggregate`` over
-double-cast arrays — deterministic evaluation order, no UDF, no
-driver-side math. Cosines are emitted in 2^20 binary fixed point
-(``cos_q20``) — see __spark_entry__._q20 for why decimal rounding is
-not engine-stable.
+Dot products are left folds in element order over double-cast arrays,
+so a float result is identical wherever it is evaluated.  Two forms
+compute them: ``zip_with`` + ``aggregate`` column algebra (``dot``,
+``cosine``, ``idot`` and the operators built on them), and the numpy
+kernels of ``llm/kernels.py``, which ``quantized_unit_vectors``,
+``kmeans_centroids``, ``ivf_assign`` and ``ivf_topk`` run through
+``mapInArrow``.  The kernels fold in the same order, so both forms give
+the same bits; they exist because the higher-order-function lambdas
+are interpreted per element and dominated the k-means and IVF wall.
+Cosines are emitted in 2^20 binary fixed point (``cos_q20``) — see
+__spark_entry__._q20 for why decimal rounding is not engine-stable.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from marketing_attribution_etl_framework__maef_spark.llm import kernels
+
+# Spark type of a kernel's integer id column, by numpy dtype
+_SQL_INT = {"int8": "tinyint", "int16": "smallint", "int32": "int", "int64": "bigint"}
 
 
 def as_double(v: Column) -> Column:
@@ -64,6 +76,38 @@ def _norm_vec(df: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: st
 
 def _pair_cos(va: str, vb: str) -> Column:
     return dot(F.col(va), F.col(vb)) / (F.col(va + "n") * F.col(vb + "n"))
+
+
+def _id_type(df: DataFrame, col: str) -> str:
+    return df.schema[col].dataType.simpleString()
+
+
+def _collect(df: DataFrame, id_col: str, vec_col: str, dtype=np.float64):
+    """(ids, (n, d) matrix, row mask) of a bounded vector table, read
+    on the driver through Arrow."""
+    t = df.select(id_col, vec_col).toArrow()
+    m, ok = kernels.matrix(t.column(1).combine_chunks(), dtype)
+    return kernels.ints(t.column(0).combine_chunks()), m, ok
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> kernels.Vectors:
+    """A bounded vector table (centroids, queries) for the kernels:
+    sorted by id, norms precomputed, null and zero-norm rows dropped."""
+    return kernels.vectors(*_collect(df, id_col, vec_col))
+
+
+def _assigned(
+    corpus: DataFrame, cents: kernels.Vectors, id_col: str, vec_col: str
+) -> DataFrame:
+    """(vec_id, _v, _vn, cluster, _cs): each nonzero corpus vector's
+    max-cosine centroid, lowest centroid id on ties, and that cosine."""
+    schema = (
+        f"vec_id {_id_type(corpus, id_col)}, _v array<double>, _vn double,"
+        f" cluster {_SQL_INT[cents.ids.dtype.name]}, _cs double"
+    )
+    return corpus.select(id_col, vec_col).mapInArrow(
+        lambda batches: (kernels.assign(b, cents) for b in batches), schema
+    )
 
 
 def brute_topk(
@@ -150,20 +194,13 @@ def ivf_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Nearest-centroid assignment (max cosine, centroid-id tie-break).
-    Centroids are broadcast; one window per vector over n_centroids
-    candidate rows."""
-    c = _norm_vec(corpus, id_col, vec_col, "vec_id", "_v")
-    cents = _norm_vec(centroids, id_col, vec_col, "centroid_id", "_c")
-    scored = c.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "_v", "_vn", "centroid_id", _pair_cos("_v", "_c").alias("_cs")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("_cs"), F.asc("centroid_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("vec_id", "_v", "_vn", F.col("centroid_id").alias("cluster"))
-    )
+    """Nearest-centroid assignment (max cosine, centroid-id tie-break)
+    -> (vec_id, _v, _vn, cluster).  The centroid table is bounded, so
+    it is collected once; one kernel pass over the corpus assigns every
+    vector.  Zero-norm (and null) vectors and centroids are dropped:
+    they have no direction, and their cosine would divide by zero."""
+    cents = _vectors(centroids, id_col, vec_col)
+    return _assigned(corpus, cents, id_col, vec_col).drop("_cs")
 
 
 def ivf_topk(
@@ -180,25 +217,27 @@ def ivf_topk(
     """IVF-flat approximate top-k: assign corpus to clusters, probe the
     ``probe`` nearest clusters per query, brute-force only inside them.
     Output (query_id, rank, vec_id, cos_q20) like brute_topk — recall
-    is traded for scanning ~probe/n_centroids of the corpus."""
-    assign = ivf_assign(corpus, centroids, id_col, vec_col)
-    q = _norm_vec(queries, query_id_col, vec_col, "query_id", "_q")
-    cents = _norm_vec(centroids, id_col, vec_col, "centroid_id", "_c")
-    qp = q.crossJoin(F.broadcast(cents)).select(
-        "query_id", "_q", "_qn", "centroid_id", _pair_cos("_q", "_c").alias("_cs")
+    is traded for scanning ~probe/n_centroids of the corpus.
+
+    Centroids and queries are the bounded side (brute_topk broadcasts
+    its queries the same way): both are collected once.  One kernel
+    pass over the corpus assigns each vector, scores only the pairs
+    whose cluster the query probes, and keeps each batch's top ``k``
+    per query; the final rank window and q20 run in Spark.  Zero-norm
+    vectors, queries and centroids are dropped (see ivf_assign)."""
+    cents = _vectors(centroids, id_col, vec_col)
+    qs = _vectors(queries, query_id_col, vec_col)
+    probes = kernels.probe_lists(qs, cents, probe)
+    schema = (
+        f"query_id {_id_type(queries, query_id_col)},"
+        f" vec_id {_id_type(corpus, id_col)}, _cos double"
     )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("_cs"), F.asc("centroid_id"))
-    probes = (
-        qp.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= probe)
-        .select("query_id", "_q", "_qn", F.col("centroid_id").alias("cluster"))
+    cand = corpus.select(id_col, vec_col).mapInArrow(
+        lambda batches: (
+            kernels.ivf_candidates(b, cents, qs, probes, k, exclude_self) for b in batches
+        ),
+        schema,
     )
-    cand = probes.join(assign, on="cluster", how="inner").select(
-        "query_id", "vec_id", _pair_cos("_q", "_v").alias("_cos")
-    )
-    if exclude_self:
-        # recall-audit mode: a corpus query must not retrieve itself
-        cand = cand.filter(F.col("vec_id") != F.col("query_id"))
     w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("vec_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w))
@@ -230,12 +269,25 @@ def quantized_unit_vectors(
     by, and 0/0 would otherwise produce NaN that the two engines
     coerce differently (Spark NaN->0 long, DuckDB errors on the
     cast)."""
-    c = _norm_vec(corpus, id_col, vec_col, "vec_id", "_v").filter(F.col("_vn") > 0)
-    return c.select(
-        "vec_id",
-        F.transform(
-            "_v", lambda x: F.floor(x / F.col("_vn") * F.lit(1048576.0) + F.lit(0.5)).cast("long")
-        ).alias("qv"),
+    return corpus.select(id_col, vec_col).mapInArrow(
+        lambda batches: map(kernels.quantize, batches),
+        f"vec_id {_id_type(corpus, id_col)}, qv array<bigint>",
+    )
+
+
+def _kmeans_seeds(q: DataFrame, k: int) -> DataFrame:
+    """The k initial centroids (cluster, cq): the q20 vectors with the
+    smallest md5(vec_id), a fixed pseudo-random draw both engines
+    replay, numbered 0..k-1 in that order."""
+    w0 = Window.orderBy("_m", "vec_id")
+    return (
+        q.select("vec_id", "qv", F.md5(F.col("vec_id").cast("string")).alias("_m"))
+        .orderBy("_m", "vec_id")
+        .limit(k)
+        .select(
+            (F.row_number().over(w0) - 1).cast("long").alias("cluster"),
+            F.col("qv").alias("cq"),
+        )
     )
 
 
@@ -249,52 +301,38 @@ def kmeans_centroids(
     """Distributed Lloyd k-means over q20 unit vectors -> (cluster, cq)
     centroid table (cq = array<long> in q20 units).
 
-    Deterministic end to end: seeds are the k vectors with the smallest
-    md5(vec_id) (a fixed pseudo-random draw both engines replay);
-    assignment minimizes the exact integer squared-L2 with centroid-id
-    tie-break; the centroid update is floor(SUM/COUNT) where SUM is an
-    exact integer — no float accumulation anywhere, so the DuckDB
-    oracle unrolls the same iterations bit-identically.
+    Deterministic end to end: seeds are ``_kmeans_seeds``; assignment
+    maximizes the exact integer 2 q.c - c.c (argmin of the squared L2,
+    whose q.q term is constant per vector) with centroid-id tie-break;
+    the centroid update is floor(SUM/COUNT) where SUM is an exact
+    integer — no float accumulation anywhere, so the DuckDB oracle
+    unrolls the same iterations bit-identically.
 
-    Scale shape per iteration: one broadcast of the k-row centroid
-    table, one corpus pass for assignment (no shuffle), then
-    posexplode -> groupBy(cluster, pos) — a map-side-combinable
-    aggregate whose reduce side is k*dim rows. Centroids are
-    localCheckpointed between iterations so the driver plan stays flat
-    (see cluster_duplicates for why). Empty clusters drop out rather
-    than being re-seeded — acceptable for IVF pruning, documented here.
+    Scale shape per iteration: the k-row centroid table is collected
+    (bounded), one kernel pass over the persisted q20 vectors emits
+    each batch's per-cluster component sums and counts (the map-side
+    combine), and a groupBy(cluster, pos) reduce of k*dim rows per
+    batch takes floor(SUM/COUNT). Centroids are localCheckpointed
+    between iterations so the driver plan stays flat (see
+    cluster_duplicates for why). Empty clusters drop out rather than
+    being re-seeded — acceptable for IVF pruning, documented here.
     At 100 TB you would persist the assignment of the LAST iteration
     and write the corpus partitioned by cluster so IVF probes prune at
     the storage layer (dynamic partition pruning)."""
     q = quantized_unit_vectors(corpus, id_col, vec_col).persist(StorageLevel.MEMORY_AND_DISK)
-    w0 = Window.orderBy("_m", "vec_id")
-    cents = (
-        q.select("vec_id", "qv", F.md5(F.col("vec_id").cast("string")).alias("_m"))
-        .orderBy("_m", "vec_id")
-        .limit(k)
-        .select(
-            (F.row_number().over(w0) - 1).cast("long").alias("cluster"),
-            F.col("qv").alias("cq"),
-        )
-        .localCheckpoint()
-    )
+    cents = _kmeans_seeds(q, k).localCheckpoint()
     for _ in range(n_iter):
-        # argmin of ||q - c||^2 == argmax of 2 q.c - c.c: the q.q term
-        # is constant per vector, and idot lambdas are interpreted, so
-        # dropping it cuts a third of the assignment stage's HOF cost
-        # (same exact-integer ranking and the same ties, so the
-        # centroid output — what the oracle checks — is unchanged)
-        score = F.lit(2) * idot(F.col("qv"), F.col("cq")) - idot(F.col("cq"), F.col("cq"))
-        wa = Window.partitionBy("vec_id").orderBy(F.desc("_s"), F.asc("cluster"))
-        assign = (
-            q.crossJoin(F.broadcast(cents))
-            .select("vec_id", "qv", "cluster", score.alias("_s"))
-            .withColumn("_rn", F.row_number().over(wa))
-            .filter(F.col("_rn") == 1)
+        cids, cq, _ = _collect(cents, "cluster", "cq", np.int64)
+        order = np.argsort(cids, kind="stable")
+        cids, cq = cids[order], cq[order]
+        partials = q.mapInArrow(
+            lambda batches, cids=cids, cq=cq: (
+                kernels.kmeans_partials(b, cids, cq) for b in batches
+            ),
+            "cluster bigint, pos bigint, s bigint, n bigint",
         )
-        comps = assign.select("cluster", F.posexplode("qv").alias("pos", "comp"))
-        sums = comps.groupBy("cluster", F.col("pos").cast("long").alias("pos")).agg(
-            F.sum("comp").alias("_s"), F.count(F.lit(1)).alias("_n")
+        sums = partials.groupBy("cluster", "pos").agg(
+            F.sum("s").alias("_s"), F.sum("n").alias("_n")
         )
         new_comp = F.floor(F.col("_s").cast("double") / F.col("_n")).cast("long")
         cents = (
@@ -544,19 +582,15 @@ def semantic_dedup(
     zeros = normed.filter(F.col("_vn") <= 0).select(
         "vec_id", F.lit(-1).cast("long").alias("cluster")
     )
-    # exclude zero vectors BEFORE assignment: ANSI mode raises on the
-    # 0/0 cosine, so the filter must precede _pair_cos, not follow it.
-    # The assignment feeds THREE consumers (both self-join branches +
-    # the survivor anti-join) and its lineage is the whole
-    # kmeans+crossJoin+window pipeline — materialize ONCE
-    # (A/B at sf0.1: localCheckpoint 4.0 s vs lazy 4.9 s warm /
-    # 13.5 s cold; the plan audit showed 28 scans lazily). At
-    # production scale this is the write of the cluster-assignment
-    # table that IVF probing also wants storage-partitioned.
-    nz = normed.filter(F.col("_vn") > 0).select(F.col("vec_id").alias(id_col))
-    assign = ivf_assign(
-        corpus.join(nz, id_col, "inner"), centroids_as_embeddings(cents), id_col, vec_col
-    ).localCheckpoint()
+    # ivf_assign drops the zero vectors itself. The assignment feeds
+    # THREE consumers (both self-join branches + the survivor
+    # anti-join) and its lineage is the whole kmeans+assignment
+    # pipeline — materialize ONCE (A/B at sf0.1: localCheckpoint 4.0 s
+    # vs lazy 4.9 s warm / 13.5 s cold; the plan audit showed 28 scans
+    # lazily). At production scale this is the write of the
+    # cluster-assignment table that IVF probing also wants
+    # storage-partitioned.
+    assign = ivf_assign(corpus, centroids_as_embeddings(cents), id_col, vec_col).localCheckpoint()
 
     a = assign.select(
         "cluster",

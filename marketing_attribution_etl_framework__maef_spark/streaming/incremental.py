@@ -233,9 +233,8 @@ class IncrementalANNStore(PartStore):
     store pattern applied to the ANN side of the house).
 
     Each micro-batch assigns its vectors to their nearest centroid
-    (broadcast centroid table — the SAME max-cosine, centroid-id
-    tie-break rule as llm/similarity.py ivf_assign, so the streaming
-    store is gated by the batch IVF assignment), reduces them to
+    (the SAME kernel pass as llm/similarity.py ivf_assign, so the
+    streaming store is gated by the batch IVF assignment), reduces them to
     per-cluster parts, and appends the parts.  The live ledger is the
     re-aggregate of the parts under the merge law
 
@@ -263,30 +262,14 @@ class IncrementalANNStore(PartStore):
 
     def __init__(self, spark: SparkSession, root: str, centroids: DataFrame):
         super().__init__(spark, root)
-        # centroids are bounded (n_centroids rows) — collect once and
-        # rebuild per batch so the foreachBatch closure never captures
-        # a DataFrame tied to the outer query's lineage
-        self._cent_rows = [
-            (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-            for r in centroids.select("vec_id", "embedding").collect()
-        ]
+        # centroids are bounded (n_centroids rows) — collect them once,
+        # so the foreachBatch closure never captures a DataFrame tied to
+        # the outer query's lineage
+        self._cents = sim._vectors(centroids, "vec_id", "embedding")
 
     def part(self, batch_df: DataFrame) -> DataFrame:
-        cents = self.spark.createDataFrame(
-            self._cent_rows, "vec_id long, embedding array<double>"
-        )
-        c = sim._norm_vec(batch_df, "vec_id", "embedding", "vec_id", "_v").filter(
-            F.col("_vn") > 0
-        )
-        ct = sim._norm_vec(cents, "vec_id", "embedding", "centroid_id", "_c")
-        scored = c.crossJoin(F.broadcast(ct)).select(
-            "vec_id", "centroid_id", sim._pair_cos("_v", "_c").alias("_cs")
-        )
-        w = Window.partitionBy("vec_id").orderBy(F.desc("_cs"), F.asc("centroid_id"))
-        best = scored.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") == 1
-        )
-        return best.groupBy("centroid_id").agg(
+        best = sim._assigned(batch_df, self._cents, "vec_id", "embedding")
+        return best.groupBy(F.col("cluster").alias("centroid_id")).agg(
             F.count(F.lit(1)).cast("long").alias("n_vectors"),
             F.min("vec_id").cast("long").alias("min_vec_id"),
             F.max("vec_id").cast("long").alias("max_vec_id"),

@@ -1778,12 +1778,12 @@ QUALIFY ROW_NUMBER() OVER w <= 10
 
 _ORACLE_ANN_IVF = f"""
 WITH {_E_NORMED},
-q AS (SELECT vec_id AS query_id, v AS qv, vn AS qn FROM e WHERE vec_id % 50 = 7),
-cents AS (SELECT vec_id AS centroid_id, v AS cv, vn AS cn FROM e WHERE vec_id < 8),
+q AS (SELECT vec_id AS query_id, v AS qv, vn AS qn FROM e WHERE vec_id % 50 = 7 AND vn > 0),
+cents AS (SELECT vec_id AS centroid_id, v AS cv, vn AS cn FROM e WHERE vec_id < 8 AND vn > 0),
 ascored AS (
   SELECT e.vec_id, e.v, e.vn, c.centroid_id,
          list_dot_product(e.v, c.cv) / (e.vn * c.cn) AS cs
-  FROM e, cents c
+  FROM e, cents c WHERE e.vn > 0
 ),
 assign AS (
   SELECT vec_id, v, vn, centroid_id AS cluster FROM ascored
@@ -1862,13 +1862,13 @@ WITH {_E_NORMED},
 cents AS (
   SELECT cluster AS centroid_id, cq::DOUBLE[] AS cv,
          sqrt(list_dot_product(cq::DOUBLE[], cq::DOUBLE[])) AS cn
-  FROM kc2
+  FROM kc2 WHERE list_dot_product(cq::DOUBLE[], cq::DOUBLE[]) > 0
 ),
-q AS (SELECT vec_id AS query_id, v AS qv0, vn AS qn FROM e WHERE vec_id % 50 = 7),
+q AS (SELECT vec_id AS query_id, v AS qv0, vn AS qn FROM e WHERE vec_id % 50 = 7 AND vn > 0),
 ascored AS (
   SELECT e.vec_id, e.v, e.vn, c.centroid_id,
          list_dot_product(e.v, c.cv) / (e.vn * c.cn) AS cs
-  FROM e, cents c
+  FROM e, cents c WHERE e.vn > 0
 ),
 assign AS (
   SELECT vec_id, v, vn, centroid_id AS cluster FROM ascored

@@ -490,6 +490,22 @@ def test_ivf_topk_prunes_but_finds_neighbors(vectors):
     assert [r.vec_id for r in rows] == [4, 3]
 
 
+def test_ivf_and_kmeans_drop_zero_norm_vectors(spark):
+    """A zero vector has no direction: ivf_assign and ivf_topk drop it
+    as a corpus vector, a query and a centroid (under ANSI its 0/0
+    cosine would raise DIVIDE_BY_ZERO), and kmeans_centroids drops it
+    through quantized_unit_vectors."""
+    rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [0.0, 0.0]), (3, [1.0, 0.1]), (4, [0.1, 1.0])]
+    v = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    cents = v.filter(F.col("vec_id") <= 2)
+    assign = {r.vec_id: r.cluster for r in sim.ivf_assign(v, cents).collect()}
+    assert assign == {0: 0, 1: 1, 3: 0, 4: 1}
+    top = sim.ivf_topk(v, v, cents, k=5, probe=2).collect()
+    assert {r.query_id for r in top} == {0, 1, 3, 4}
+    assert {r.vec_id for r in top} == {0, 1, 3, 4}
+    assert len(sim.kmeans_centroids(v, k=2, n_iter=1).collect()) == 2
+
+
 def test_lsh_topk_bucketed(spark, vectors):
     planes = sim.random_hyperplanes(spark, n_planes=2, dim=4)
     assert planes.count() == 2

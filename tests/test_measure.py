@@ -4,6 +4,7 @@ in-process interleaved A/B."""
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 
 import pytest
@@ -53,3 +54,49 @@ def test_ab_interleaves_one_sample_per_side(spark, sf_dir, tmp_path):
     )
     assert len(a) == 1 and len(b) == 1
     assert a[0] > 0 and b[0] > 0
+
+
+def _canned(items_per_s: float, peak: float, java_mb: float, failed: int = 0) -> tuple[dict, dict]:
+    """One perfbench (detail, result) pair as run.py prints them."""
+    detail = {"workload": "w", "peak_rss_mb_by_process": {"java": java_mb, "python3": peak - java_mb}}
+    result = {
+        "correct": failed == 0,
+        "attempted": 10,
+        "failed": failed,
+        "metrics": {
+            "items_per_s": {"value": items_per_s, "unit": "1/s"},
+            "peak_rss_mb": {"value": peak, "unit": "MB"},
+        },
+    }
+    return detail, result
+
+
+def test_bench_report_medians_quartiles_wins_and_rss_by_process():
+    a = [_canned(100.0, 1000.0, 900.0), _canned(110.0, 1010.0, 905.0), _canned(90.0, 990.0, 895.0)]
+    b = [_canned(130.0, 1100.0, 900.0), _canned(105.0, 1090.0, 906.0), _canned(120.0, 1080.0, 894.0, failed=1)]
+    lines = measure.bench_report(a, b, {"items_per_s": "higher", "peak_rss_mb": "lower"})
+    by_metric = {ln.split()[0]: ln for ln in lines[1:3]}
+    # items_per_s: A median 100 [95, 105], B median 120 [112.5, 125];
+    # B won pairs 0 and 2 (130 > 100, 120 > 90), lost pair 1
+    ips = by_metric["items_per_s"]
+    assert "100.00 [95.00, 105.00]" in ips and "120.00 [112.50, 125.00]" in ips
+    assert "+20.0%" in ips and ips.endswith("2/3")
+    # peak_rss_mb is lower-is-better: B is higher in every pair
+    assert by_metric["peak_rss_mb"].endswith("0/3") and "+9.0%" in by_metric["peak_rss_mb"]
+    rss = {ln.split()[0]: ln.split()[1:] for ln in lines if ln.startswith("  ")}
+    assert rss == {"java": ["900.0", "900.0"], "python3": ["100.0", "186.0"]}
+    assert lines[-1] == "failed operations: A 0/30 (3/3 runs correct)  B 1/30 (2/3 runs correct)"
+
+
+def test_perfbench_run_reads_the_last_two_stdout_lines(tmp_path):
+    bench_dir = tmp_path / "perfbench"
+    bench_dir.mkdir()
+    detail, result = _canned(1.0, 2.0, 1.0)
+    (bench_dir / "run.py").write_text(
+        "import json, sys\n"
+        "print('noise line')\n"
+        f"print(json.dumps({detail!r}))\n"
+        f"print(json.dumps({result!r}))\n"
+        "sys.exit(1)\n"
+    )
+    assert measure.perfbench_run(str(tmp_path), "w", 1, 1) == (detail, result)

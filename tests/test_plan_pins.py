@@ -62,21 +62,12 @@ def test_kmeans_seed_global_window_is_limit_bounded(spark, sf_dir):
     """The k-means seed picker ranks a md5-ordered `.limit(k)` sample;
     its plan is consumed through localCheckpoint inside
     kmeans_centroids, so pin the seed expression directly."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from marketing_attribution_etl_framework__maef_spark.llm import similarity as sim
 
     q = sim.quantized_unit_vectors(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet"), "vec_id", "embedding"
     )
-    w0 = Window.orderBy("_m", "vec_id")
-    seed = (
-        q.select("vec_id", "qv", F.md5(F.col("vec_id").cast("string")).alias("_m"))
-        .orderBy("_m", "vec_id")
-        .limit(8)
-        .select((F.row_number().over(w0) - 1).alias("cluster"), "qv")
-    )
+    seed = sim._kmeans_seeds(q, 8)
     _assert_global_window_above_limit(seed, 8)
 
 

@@ -17,12 +17,19 @@ Subcommands:
            also writes each raw plan.
   compare  per-query deltas between two BENCH_DETAIL.json-shaped files,
            largest regression first, plus totals.
+  bench    interleaved perfbench A/B between two checkouts (either can
+           be a plain ``git clone`` or ``git worktree`` of another
+           commit): ``perfbench/run.py`` runs once per seed in each
+           checkout for BENCHMARK.json's run length, the side that runs
+           first flips every pair, and the per-metric medians, q1-q3
+           and per-process peak RSS print.
 
 Usage:
   python tools/measure.py time [--sf SF_DIR] [--n N] (--all | QUERY ...)
   python tools/measure.py ab [--sf SF_DIR] [--n N] A B
   python tools/measure.py plans [--sf SF_DIR] [--dump PATTERN] (--all | QUERY ...)
   python tools/measure.py compare OLD.json NEW.json [MIN_DELTA_S]
+  python tools/measure.py bench DIR_A DIR_B --workload W --seeds N [N ...]
 
 ``--sf`` defaults to $SPARK_GRAFT_SF_DIR.  ``--dump`` takes a path with
 ``{q}`` in it, e.g. ``plans/r13/{q}_before.txt``.
@@ -38,6 +45,7 @@ import json
 import os
 import re
 import statistics
+import subprocess
 import sys
 import time
 from collections.abc import Callable, Iterable
@@ -106,12 +114,15 @@ def ab(spark, sf_dir: str, a: QueryFn, b: QueryFn, n: int) -> tuple[list[float],
     return sides[0][2], sides[1][2]
 
 
+def quartiles(samples: list[float]) -> list[float]:
+    """[q1, median, q3] (inclusive method; one sample is all three)."""
+    if len(samples) > 1:
+        return statistics.quantiles(samples, n=4, method="inclusive")
+    return list(samples) * 3
+
+
 def summarize(samples: list[float]) -> str:
-    q1, med, q3 = (
-        statistics.quantiles(samples, n=4, method="inclusive")
-        if len(samples) > 1
-        else samples * 3
-    )
+    q1, med, q3 = quartiles(samples)
     return (
         f"min={min(samples):7.3f} q1={q1:7.3f} median={med:7.3f} q3={q3:7.3f}"
         f"  samples={samples}"
@@ -221,6 +232,78 @@ def compare(old: dict, new: dict, min_delta: float = 0.25) -> list[str]:
     return lines
 
 
+def perfbench_run(checkout: str, workload: str, seed: int, seconds: int) -> tuple[dict, dict]:
+    """One untraced ``perfbench/run.py`` in ``checkout``: its (detail,
+    result) lines, the last two of stdout."""
+    cmd = [
+        sys.executable, "perfbench/run.py", "--workload", workload,
+        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0",
+    ]
+    proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    lines = proc.stdout.strip().splitlines()
+    if len(lines) < 2:
+        raise RuntimeError(f"perfbench in {checkout} printed no result:\n{proc.stderr[-2000:]}")
+    detail, result = [json.loads(x) for x in lines[-2:]]
+    return detail, result
+
+
+def bench_report(
+    runs_a: list[tuple[dict, dict]], runs_b: list[tuple[dict, dict]], better: dict[str, str]
+) -> list[str]:
+    """Per-metric median and q1-q3 of each side, B's median change, and
+    the pairs B won (by the metric's ``better`` direction), then the
+    median peak RSS per process name and the failed-operation counts.
+    ``runs_*`` are (detail, result) pairs in pair order."""
+    def values(runs, metric):
+        return [r["metrics"][metric]["value"] for _, r in runs]
+
+    def cell(xs):
+        q1, med, q3 = quartiles(xs)
+        return f"{med:10.2f} [{q1:.2f}, {q3:.2f}]"
+
+    lines = [f"{'metric':14s} {'A median [q1, q3]':>28s} {'B median [q1, q3]':>28s}  {'B/A':>7s}  B won"]
+    for metric in runs_a[0][1]["metrics"]:
+        a, b = values(runs_a, metric), values(runs_b, metric)
+        sign = 1 if better.get(metric, "lower") == "higher" else -1
+        won = sum(sign * (y - x) > 0 for x, y in zip(a, b))
+        change = statistics.median(b) / statistics.median(a) - 1 if statistics.median(a) else 0.0
+        lines.append(
+            f"{metric:14s} {cell(a):>28s} {cell(b):>28s}  {change:+7.1%}  {won}/{len(a)}"
+        )
+    lines.append("peak_rss_mb_by_process (median MB)     A          B")
+    procs = dict.fromkeys(p for d, _ in runs_a + runs_b for p in d.get("peak_rss_mb_by_process", {}))
+    for p in procs:
+        med = [
+            statistics.median([d.get("peak_rss_mb_by_process", {}).get(p, 0.0) for d, _ in runs])
+            for runs in (runs_a, runs_b)
+        ]
+        lines.append(f"  {p:32s} {med[0]:10.1f} {med[1]:10.1f}")
+    lines.append(
+        "failed operations: "
+        + "  ".join(
+            f"{tag} {sum(r['failed'] for _, r in runs)}/{sum(r['attempted'] for _, r in runs)}"
+            f" ({sum(r['correct'] for _, r in runs)}/{len(runs)} runs correct)"
+            for tag, runs in (("A", runs_a), ("B", runs_b))
+        )
+    )
+    return lines
+
+
+def bench(dir_a: str, dir_b: str, workload: str, seeds: list[int]) -> list[str]:
+    """Interleaved perfbench A/B: one pair per seed, A first on even
+    pairs and B first on odd ones.  The run length and each metric's
+    better direction come from ``dir_a``'s BENCHMARK.json."""
+    with open(os.path.join(dir_a, "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
+    runs: tuple[list, list] = ([], [])
+    for i, seed in enumerate(seeds):
+        for side in (0, 1) if i % 2 == 0 else (1, 0):
+            checkout = (dir_a, dir_b)[side]
+            runs[side].append(perfbench_run(checkout, workload, seed, spec["run_seconds"]))
+            print(f"pair {i} seed {seed} {'AB'[side]} done", file=sys.stderr, flush=True)
+    return bench_report(*runs, {m["name"]: m["better"] for m in spec["end_to_end"]})
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -242,8 +325,16 @@ def main() -> None:
     p_cmp.add_argument("old")
     p_cmp.add_argument("new")
     p_cmp.add_argument("min_delta", nargs="?", type=float, default=0.25)
+    p_bench = sub.add_parser("bench")
+    p_bench.add_argument("dir_a")
+    p_bench.add_argument("dir_b")
+    p_bench.add_argument("--workload", required=True)
+    p_bench.add_argument("--seeds", type=int, nargs="+", required=True)
     args = ap.parse_args()
 
+    if args.cmd == "bench":
+        print("\n".join(bench(args.dir_a, args.dir_b, args.workload, args.seeds)))
+        return
     if args.cmd == "compare":
         with open(args.old) as fo, open(args.new) as fn:
             print("\n".join(compare(json.load(fo), json.load(fn), args.min_delta)))
